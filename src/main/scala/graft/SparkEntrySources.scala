@@ -494,7 +494,7 @@ private[graft] object SparkEntrySources {
     // S26 — FILE SKIPPING via manifest min/max stats (round-15; the
     // Iceberg/Delta file-stats read path, the first-order lakehouse read
     // optimization): commitAppendStats records each delta's stats-column
-    // range in the manifest; readPruned answers a range predicate
+    // range in the manifest; the filtered read answers a range predicate
     // opening ONLY the deltas whose range can match (stats-less dirs are
     // never skipped — optimization, not semantics). Fixture: four
     // SF-adaptive quartile appends (the fourth deliberately stats-less)
@@ -524,10 +524,10 @@ private[graft] object SparkEntrySources {
           .select(col("c_custkey")), root, "c_custkey")
       val cols = Seq("c_custkey", "c_mktsegment")
       def phase(n: Long, lo: Long, hi: Long) = {
-        val (opened, skipped) =
-          Snapshots.pruneCounts(s, root, "c_custkey", lo, hi)
+        val range = col("c_custkey").between(lo, hi)
+        val (opened, skipped) = Snapshots.scanReport(s, root, range)
         Validations.tableFingerprint(
-            Snapshots.readPruned(s, root, "c_custkey", lo, hi), cols)
+            Snapshots.read(s, root, range, None), cols)
           .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
             lit(opened.toLong).as("opened"), lit(skipped.toLong).as("skipped"))
       }
@@ -576,10 +576,10 @@ private[graft] object SparkEntrySources {
         root, "c_custkey")
       val cols = Seq("c_custkey", "c_mktsegment")
       def phase(n: Long, lo: Long, hi: Long) = {
-        val (opened, skipped) =
-          Snapshots.pruneCounts(s, root, "c_custkey", lo, hi)
+        val range = col("c_custkey").between(lo, hi)
+        val (opened, skipped) = Snapshots.scanReport(s, root, range)
         Validations.tableFingerprint(
-            Snapshots.readPruned(s, root, "c_custkey", lo, hi), cols)
+            Snapshots.read(s, root, range, None), cols)
           .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
             lit(opened.toLong).as("opened"), lit(skipped.toLong).as("skipped"))
       }
@@ -650,7 +650,7 @@ private[graft] object SparkEntrySources {
     // VERDICT's #6, the standard complement to s26's range stats —
     // Iceberg's puffin blooms, parquet's column-index blooms): each
     // bloom'd dir carries a `_bloom_<col>` sidecar built by Spark's own
-    // bloomFilter aggregate; readPoint(column = v) opens a dir only if
+    // bloomFilter aggregate; a read filtered on column = v opens a dir only if
     // its range stats admit v AND its Bloom might contain v. Error is
     // one-sided by construction: a Bloom can only OPEN extra dirs,
     // never skip one holding the value. Fixture: three bloom'd dirs
@@ -685,9 +685,10 @@ private[graft] object SparkEntrySources {
         (probes.getLong(0), probes.getLong(1) + 17L, probes.getLong(2))
       val cols = Seq("c_custkey", "c_mktsegment")
       def phase(n: Long, v: Long) = {
-        val (opened, skipped) = Snapshots.pointCounts(s, root, "c_custkey", v)
+        val point = col("c_custkey") === v
+        val (opened, skipped) = Snapshots.scanReport(s, root, point)
         Validations.tableFingerprint(
-            Snapshots.readPoint(s, root, "c_custkey", v), cols)
+            Snapshots.read(s, root, point, None), cols)
           .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
             lit(opened.toLong).as("opened"), lit(skipped.toLong).as("skipped"))
       }
@@ -1179,18 +1180,20 @@ private[graft] object SparkEntrySources {
       val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).collect()(0)
       val (t0, t1v) = (mm.getLong(0), mm.getLong(1))
       val (lo, hi) = (t0 + (t1v - t0) / 4, t0 + (t1v - t0) / 2)
-      val (o1, k1) = Snapshots.hiddenRangeCounts(s, root, dayT, lo, hi)
+      val window = col("ts_us").between(lo, hi)
+      val (o1, k1) = Snapshots.scanReport(s, root, window)
       val cols = Seq("event_id", "user_id", "ts_us")
       val p1 = Validations.tableFingerprint(
-          Snapshots.readHiddenRange(s, root, dayT, lo, hi), cols)
+          Snapshots.read(s, root, window, None), cols)
         .select(lit(1L).as("phase"), col("n_rows"), col("fingerprint"),
           lit(o1.toLong).as("opened"), lit(k1.toLong).as("skipped"))
       val bT = BucketTransform("user_id", 16)
       Snapshots.commitAppendHidden(ev, broot, bT)
       val probe = ev.agg(max(col("user_id"))).collect()(0).getLong(0)
-      val (o2, k2) = Snapshots.hiddenPointCounts(s, broot, bT, probe)
+      val point = col("user_id") === probe
+      val (o2, k2) = Snapshots.scanReport(s, broot, point)
       val p2 = Validations.tableFingerprint(
-          Snapshots.readHiddenPoint(s, broot, bT, probe), cols)
+          Snapshots.read(s, broot, point, None), cols)
         .select(lit(2L).as("phase"), col("n_rows"), col("fingerprint"),
           lit(o2.toLong).as("opened"), lit(k2.toLong).as("skipped"))
       p1.union(p2)
@@ -1282,10 +1285,11 @@ private[graft] object SparkEntrySources {
       val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).collect()(0)
       val (t0, t1v) = (mm.getLong(0), mm.getLong(1))
       val (lo, hi) = (t0 + (t1v - t0) / 4, t0 + (t1v - t0) / 2)
-      val (o1, k1) = Snapshots.hiddenRangeCounts(s, root, dayT, lo, hi)
+      val window = col("ts_us").between(lo, hi)
+      val (o1, k1) = Snapshots.scanReport(s, root, window)
       val cols = Seq("event_id", "user_id", "ts_us")
       val p1 = Validations.tableFingerprint(
-          Snapshots.readHiddenRange(s, root, dayT, lo, hi), cols)
+          Snapshots.read(s, root, window, None), cols)
         .select(lit(1L).as("phase"), col("n_rows"), col("fingerprint"),
           lit(o1.toLong).as("opened"), lit(k1.toLong).as("skipped"))
       val after = Snapshots.current(s, root).get
@@ -1305,13 +1309,14 @@ private[graft] object SparkEntrySources {
       val probe = cust.filter(pmod(col("c_custkey"), lit(5)) =!= 0)
         .agg(max(col("c_custkey"))).collect()(0).getLong(0)
       val ccols = Seq("c_custkey", "c_mktsegment")
-      val (o3, k3) = Snapshots.pointCounts(s, root2, "c_custkey", probe)
+      val point = col("c_custkey") === probe
+      val (o3, k3) = Snapshots.scanReport(s, root2, point)
       val p3 = Validations.tableFingerprint(
-          Snapshots.readPoint(s, root2, "c_custkey", probe), ccols)
+          Snapshots.read(s, root2, point, None), ccols)
         .select(lit(3L).as("phase"), col("n_rows"), col("fingerprint"),
           lit(o3.toLong).as("opened"), lit(k3.toLong).as("skipped"))
-      val (o4, k4) = Snapshots.pruneCounts(s, root2, "c_custkey",
-        1L, Long.MaxValue / 2)
+      val (o4, k4) = Snapshots.scanReport(s, root2,
+        col("c_custkey").between(1L, Long.MaxValue / 2))
       val p4 = Validations.tableFingerprint(Snapshots.read(s, root2), ccols)
         .select(lit(4L).as("phase"), col("n_rows"), col("fingerprint"),
           lit(o4.toLong).as("opened"), lit(k4.toLong).as("skipped"))
@@ -1324,7 +1329,7 @@ private[graft] object SparkEntrySources {
     // string bounds for exactly this). commitAppendStats on a string
     // column now records 16-byte truncated bounds (lower = byte
     // prefix, upper = prefix-successor — sound in the unsigned byte
-    // order both engines sort strings by); readPrunedStr/readPointStr
+    // order both engines sort strings by); filtered reads
     // skip on them, and blooms handle string keys natively. Fixture:
     // zero-padded 'CUST-%011d (16 bytes — exact, untruncated bounds)' keys (lexical order == numeric order,
     // so the oracle replants ranges as numeric predicates) — three
@@ -1365,10 +1370,10 @@ private[graft] object SparkEntrySources {
           .select(col("skey")), root, "skey")
       val cols = Seq("skey", "c_mktsegment")
       def phase(n: Long, lo: String, hi: String) = {
-        val (opened, skipped) =
-          Snapshots.pruneCountsStr(s, root, "skey", lo, hi)
+        val range = col("skey").between(lo, hi)
+        val (opened, skipped) = Snapshots.scanReport(s, root, range)
         Validations.tableFingerprint(
-            Snapshots.readPrunedStr(s, root, "skey", lo, hi), cols)
+            Snapshots.read(s, root, range, None), cols)
           .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
             lit(opened.toLong).as("opened"), lit(skipped.toLong).as("skipped"))
       }
@@ -1385,9 +1390,10 @@ private[graft] object SparkEntrySources {
       val hitK = cust.filter(pmod(col("c_custkey"), lit(4)) === 1)
         .agg(max(col("c_custkey"))).collect()(0).getLong(0)
       def pointPhase(n: Long, v: String) = {
-        val (opened, skipped) = Snapshots.pointCountsStr(s, broot, "skey", v)
+        val point = col("skey") === v
+        val (opened, skipped) = Snapshots.scanReport(s, broot, point)
         Validations.tableFingerprint(
-            Snapshots.readPointStr(s, broot, "skey", v), cols)
+            Snapshots.read(s, broot, point, None), cols)
           .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
             lit(opened.toLong).as("opened"), lit(skipped.toLong).as("skipped"))
       }
@@ -1402,7 +1408,7 @@ private[graft] object SparkEntrySources {
     // S39 — PARTITION-SPEC EVOLUTION (round-17; the r16 VERDICT's #4,
     // Iceberg's per-spec pruning): a table whose hidden-partition
     // layout CHANGED over its life — here bucket(8) then bucket(16) on
-    // user_id — holds dirs of both generations, and readHiddenAuto
+    // user_id — holds dirs of both generations, and the filtered read
     // prunes EACH dir under its own spec, parsed back from the
     // synthetic stats name (the manifest is the spec registry). An
     // equality delete rides across both generations. Phases pin
@@ -1432,9 +1438,10 @@ private[graft] object SparkEntrySources {
       val (probe, umin) = (agg.getLong(0), agg.getLong(1))
       val cols = Seq("event_id", "user_id")
       def phase(n: Long, lo: Long, hi: Long) = {
-        val (o, k) = Snapshots.hiddenAutoCounts(s, root, "user_id", lo, hi)
+        val range = col("user_id").between(lo, hi)
+        val (o, k) = Snapshots.scanReport(s, root, range)
         Validations.tableFingerprint(
-            Snapshots.readHiddenAuto(s, root, "user_id", lo, hi), cols)
+            Snapshots.read(s, root, range, None), cols)
           .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
             lit(o.toLong).as("opened"), lit(k.toLong).as("skipped"))
       }
@@ -1559,7 +1566,7 @@ private[graft] object SparkEntrySources {
     // multi-field partition specs): the event log lands as one dir per
     // (day, user-bucket) TUPLE — day × bucket(8) is the canonical
     // 100-TB event layout — each dir carrying one synthetic stats line
-    // PER transform, and readHiddenAutoMulti opens a dir only when
+    // PER transform, and the filtered read opens a dir only when
     // EVERY axis admits: a (time window AND user) predicate prunes
     // MULTIPLICATIVELY. An equality delete rides across. Phases pin
     // (opened, skipped) derived in-oracle from the data's own
@@ -1586,21 +1593,17 @@ private[graft] object SparkEntrySources {
       val (t0, t1v, probe) = (mm.getLong(0), mm.getLong(1), mm.getLong(2))
       val (lo, hi) = (t0 + (t1v - t0) / 4, t0 + (t1v - t0) / 2)
       val cols = Seq("event_id", "user_id", "ts_us")
-      def fp(n: Long, d: org.apache.spark.sql.DataFrame,
-             oc: (Int, Int)) =
-        Validations.tableFingerprint(d, cols)
+      def fp(n: Long, filter: org.apache.spark.sql.Column) = {
+        val (opened, skipped) = Snapshots.scanReport(s, root, filter)
+        Validations.tableFingerprint(Snapshots.read(s, root, filter, None), cols)
           .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
-            lit(oc._1.toLong).as("opened"), lit(oc._2.toLong).as("skipped"))
-      val both = Seq(("ts_us", lo, hi), ("user_id", probe, probe))
-      val p1 = fp(1L,
-        Snapshots.readHiddenAutoMulti(s, root, both),
-        Snapshots.hiddenAutoMultiCounts(s, root, both))
-      val p2 = fp(2L,
-        Snapshots.readHiddenAuto(s, root, "ts_us", lo, hi),
-        Snapshots.hiddenAutoCounts(s, root, "ts_us", lo, hi))
-      val p3 = fp(3L,
-        Snapshots.readHiddenPointAuto(s, root, "user_id", probe),
-        Snapshots.hiddenPointAutoCounts(s, root, "user_id", probe))
+            lit(opened.toLong).as("opened"), lit(skipped.toLong).as("skipped"))
+      }
+      val window = col("ts_us").between(lo, hi)
+      val user = col("user_id") === probe
+      val p1 = fp(1L, window && user)
+      val p2 = fp(2L, window)
+      val p3 = fp(3L, user)
       p1.union(p2).union(p3)
     }),
 
@@ -1637,20 +1640,15 @@ private[graft] object SparkEntrySources {
       val (lo, hi) = (sid(n / 4), sid(n / 2))
       val probe = sid(n - 1)
       val cols = Seq("sid", "n_chars")
-      def fp(ph: Long, d: org.apache.spark.sql.DataFrame,
-             oc: (Int, Int)) =
-        Validations.tableFingerprint(d, cols)
+      def fp(ph: Long, table: String, filter: org.apache.spark.sql.Column) = {
+        val (opened, skipped) = Snapshots.scanReport(s, table, filter)
+        Validations.tableFingerprint(Snapshots.read(s, table, filter, None), cols)
           .select(lit(ph).as("phase"), col("n_rows"), col("fingerprint"),
-            lit(oc._1.toLong).as("opened"), lit(oc._2.toLong).as("skipped"))
-      val p1 = fp(1L,
-        Snapshots.readHiddenRangeStr(s, root, t7, lo, hi),
-        Snapshots.hiddenRangeStrCounts(s, root, t7, lo, hi))
-      val p2 = fp(2L,
-        Snapshots.readHiddenPointStr(s, rootB, b8, probe),
-        Snapshots.hiddenPointStrCounts(s, rootB, b8, probe))
-      val p3 = fp(3L,
-        Snapshots.readHiddenRangeStr(s, root, t7, sid(0L), sid(n - 1)),
-        Snapshots.hiddenRangeStrCounts(s, root, t7, sid(0L), sid(n - 1)))
+            lit(opened.toLong).as("opened"), lit(skipped.toLong).as("skipped"))
+      }
+      val p1 = fp(1L, root, col("sid").between(lo, hi))
+      val p2 = fp(2L, rootB, col("sid") === probe)
+      val p3 = fp(3L, root, col("sid").between(sid(0L), sid(n - 1)))
       p1.union(p2).union(p3)
     }),
 
@@ -1724,7 +1722,7 @@ private[graft] object SparkEntrySources {
 
     // S45 — DISJUNCTIVE pruning (round-18; the r17 VERDICT's #5):
     // IN-lists and OR predicates — routine on tenant dashboards —
-    // used to fall back to open-everything; readHiddenAutoDisj admits
+    // used to fall back to open-everything; the filtered read admits
     // a dir when ANY disjunct admits it, so they prune like their
     // conjunctive duals. Phases, each with in-oracle (opened, skipped)
     // from the data's own occupancy: 1 = a three-user IN-list on a
@@ -1757,25 +1755,17 @@ private[graft] object SparkEntrySources {
       val (w1lo, w1hi) = (t0, t0 + (t1v - t0) / 8)
       val (w2lo, w2hi) = (t0 + (t1v - t0) / 2, t0 + 5L * (t1v - t0) / 8)
       val cols = Seq("event_id", "user_id", "ts_us")
-      def fp(ph: Long, d: org.apache.spark.sql.DataFrame,
-             oc: (Int, Int)) =
-        Validations.tableFingerprint(d, cols)
+      def fp(ph: Long, table: String, filter: org.apache.spark.sql.Column) = {
+        val (opened, skipped) = Snapshots.scanReport(s, table, filter)
+        Validations.tableFingerprint(Snapshots.read(s, table, filter, None), cols)
           .select(lit(ph).as("phase"), col("n_rows"), col("fingerprint"),
-            lit(oc._1.toLong).as("opened"), lit(oc._2.toLong).as("skipped"))
-      val inList = Seq(u1, u2, u3)
-      val p1 = fp(1L,
-        Snapshots.readHiddenAutoIn(s, rootB, "user_id", inList),
-        Snapshots.hiddenAutoInCounts(s, rootB, "user_id", inList))
-      val orWindows = Seq(Seq(("ts_us", w1lo, w1hi)),
-        Seq(("ts_us", w2lo, w2hi)))
-      val p2 = fp(2L,
-        Snapshots.readHiddenAutoDisj(s, rootT, orWindows),
-        Snapshots.hiddenAutoDisjCounts(s, rootT, orWindows))
-      val mixed = Seq(Seq(("user_id", u1, u1)),
-        Seq(("user_id", u2, u2 + 1)))
-      val p3 = fp(3L,
-        Snapshots.readHiddenAutoDisj(s, rootB, mixed),
-        Snapshots.hiddenAutoDisjCounts(s, rootB, mixed))
+            lit(opened.toLong).as("opened"), lit(skipped.toLong).as("skipped"))
+      }
+      val p1 = fp(1L, rootB, col("user_id").isin(u1, u2, u3))
+      val p2 = fp(2L, rootT, col("ts_us").between(w1lo, w1hi) ||
+        col("ts_us").between(w2lo, w2hi))
+      val p3 = fp(3L, rootB, col("user_id") === u1 ||
+        col("user_id").between(u2, u2 + 1))
       p1.union(p2).union(p3)
     }),
 

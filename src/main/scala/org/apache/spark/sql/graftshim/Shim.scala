@@ -31,6 +31,12 @@ object Shim {
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The Catalyst tree a Column stands for, converted eagerly (the
+    * classic converter — `expression` above defers it behind a
+    * wrapper node), so a caller can read the operator structure. */
+  def catalyst(c: Column): Expression =
+    org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
   /** A streaming-tagged DataFrame over an already-planned batch
     * computation — what a V1 streaming `Source.getBatch` must return
     * (MicroBatchExecution asserts `isStreaming`; the builtin V1

@@ -697,7 +697,7 @@ class PlanShapeSpec extends SparkSpec {
         s"time), not a post-scan row filter:\n$p")
   }
 
-  test("s34/s35: predicates PUSH to parquet through the rename Project and the hidden-range scan") {
+  timedTest("s34/s35: predicates PUSH to parquet through the rename Project and the hidden-range scan", 300) {
     import graft.ops.Snapshots
     import spark.implicits._
     // rename path: a filter on the NEW name must reach the old dir's
@@ -720,7 +720,8 @@ class PlanShapeSpec extends SparkSpec {
     val t10 = Snapshots.TruncateTransform("v", 10000L)
     Snapshots.commitAppendHidden(
       (1L to 3000L).map(i => (i, i * 10)).toDF("k", "v"), hroot, t10)
-    val p2 = finalPlan(Snapshots.readHiddenRange(spark, hroot, t10, 0L, 9999L))
+    val p2 = finalPlan(
+      Snapshots.read(spark, hroot, $"v".between(0L, 9999L), None))
     val scans2 = deep(p2).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
     assert(scans2.nonEmpty && scans2.forall(_.dataFilters.nonEmpty),
@@ -728,7 +729,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(shuffles(p2).isEmpty, s"hidden-range read is scan-only:\n$p2")
   }
 
-  test("s38/s39/s42: string-range, spec-aware, and conjunctive reads stay scan-only with pushed predicates (round-17)") {
+  timedTest("s38/s39/s42: string-range, spec-aware, and conjunctive reads stay scan-only with pushed predicates (round-17)", 300) {
     import graft.ops.Snapshots
     import spark.implicits._
     // string bounds: the BETWEEN predicate reaches the surviving dirs'
@@ -738,7 +739,8 @@ class PlanShapeSpec extends SparkSpec {
       (1L to 2000L).map(i => (f"K$i%08d", i)).toDF("id", "v"), root,
       Seq("id"), None)
     val p1 = finalPlan(
-      Snapshots.readPrunedStr(spark, root, "id", "K00000010", "K00000020"))
+      Snapshots.read(spark, root, $"id".between("K00000010", "K00000020"),
+        None))
     val scans1 = deep(p1).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
     assert(scans1.nonEmpty && scans1.forall(_.dataFilters.nonEmpty),
@@ -751,14 +753,15 @@ class PlanShapeSpec extends SparkSpec {
       (1L to 3000L).map(i => (i, i * 10, i % 50)).toDF("k", "t", "u"),
       hroot, Seq(Snapshots.TruncateTransform("t", 10000L),
         Snapshots.BucketTransform("u", 4)), None)
-    val p2 = finalPlan(Snapshots.readHiddenAutoMulti(spark, hroot,
-      Seq(("t", 0L, 9999L), ("u", 2L, 2L))))
+    val p2 = finalPlan(Snapshots.read(spark, hroot,
+      $"t".between(0L, 9999L) && $"u".between(2L, 2L), None))
     val scans2 = deep(p2).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
     assert(scans2.nonEmpty && scans2.forall(_.dataFilters.nonEmpty),
       s"both raw predicates must push into the opened dirs' scans:\n$p2")
     assert(shuffles(p2).isEmpty, s"conjunctive auto read is scan-only:\n$p2")
-    val p3 = finalPlan(Snapshots.readHiddenAuto(spark, hroot, "t", 0L, 9999L))
+    val p3 = finalPlan(
+      Snapshots.read(spark, hroot, $"t".between(0L, 9999L), None))
     assert(shuffles(p3).isEmpty, s"spec-aware read is scan-only:\n$p3")
   }
 

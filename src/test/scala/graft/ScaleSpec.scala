@@ -528,7 +528,7 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("snapshots: file-skipping stats — pruned read == filtered read, stats survive later commits") {
+  timedTest("snapshots: file-skipping stats — pruned read == filtered read, stats survive later commits", 300) {
     import graft.ops.Snapshots
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("snapstats").toString
@@ -543,14 +543,14 @@ class ScaleSpec extends SparkSpec {
     assert(Snapshots.current(spark, root).get.stats.size == 2,
       "stats lines must ride every child manifest")
     def pruned(lo: Long, hi: Long) =
-      Snapshots.readPruned(spark, root, "k", lo, hi)
+      Snapshots.read(spark, root, col("k").between(lo, hi), None)
         .as[(Long, String)].collect().toSet
     // skip the [10,20] dir entirely; the stats-less dir is still read
-    assert(Snapshots.pruneCounts(spark, root, "k", 1L, 6L) == ((2, 1)))
+    assert(Snapshots.scanReport(spark, root, col("k").between(1L, 6L)) == ((2, 1)))
     assert(pruned(1L, 6L) == Set((1L, "a"), (3L, "e"))) // 5 deleted
     // disjoint-everything predicate: zero dirs with stats match, the
     // stats-less dir filters to nothing — empty frame, correct schema
-    assert(Snapshots.readPruned(spark, root, "k", 100L, 200L).count() == 0L)
+    assert(Snapshots.read(spark, root, col("k").between(100L, 200L), None).count() == 0L)
     // pruned == full filtered read for every window (the semantics gate)
     for ((lo, hi) <- Seq((1L, 6L), (4L, 12L), (1L, 50L), (15L, 25L))) {
       val full = Snapshots.read(spark, root)
@@ -565,13 +565,13 @@ class ScaleSpec extends SparkSpec {
       s"rewrite must re-derive stats on the rewritten dir: $postRw")
     // surviving rows are k in {1,3,10,20} -> the one dir spans [1,20]:
     // an in-range read opens it, a disjoint range skips the whole table
-    assert(Snapshots.pruneCounts(spark, root, "k", 1L, 6L) == ((1, 0)))
+    assert(Snapshots.scanReport(spark, root, col("k").between(1L, 6L)) == ((1, 0)))
     assert(pruned(1L, 6L) == Set((1L, "a"), (3L, "e")))
-    assert(Snapshots.pruneCounts(spark, root, "k", 100L, 200L) == ((0, 1)))
-    assert(Snapshots.readPruned(spark, root, "k", 100L, 200L).count() == 0L)
+    assert(Snapshots.scanReport(spark, root, col("k").between(100L, 200L)) == ((0, 1)))
+    assert(Snapshots.read(spark, root, col("k").between(100L, 200L), None).count() == 0L)
   }
 
-  test("snapshots: stats survive MERGE commits and mixed-column tables stay readable (round-16)") {
+  timedTest("snapshots: stats survive MERGE commits and mixed-column tables stay readable (round-16)", 300) {
     import graft.ops.Snapshots
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("snapstats16").toString
@@ -582,8 +582,8 @@ class ScaleSpec extends SparkSpec {
     Snapshots.commitAppendStats(
       Seq((10L, 1000L, "c"), (20L, 2000L, "d")).toDF("k", "ts", "v"),
       root, Seq("k", "ts"), None)
-    assert(Snapshots.pruneCounts(spark, root, "k", 1L, 6L) == ((1, 1)))
-    assert(Snapshots.pruneCounts(spark, root, "ts", 1500L, 3000L) == ((1, 1)))
+    assert(Snapshots.scanReport(spark, root, col("k").between(1L, 6L)) == ((1, 1)))
+    assert(Snapshots.scanReport(spark, root, col("ts").between(1500L, 3000L)) == ((1, 1)))
     // MERGE maintains the established stats columns on its payload dir:
     // replace k=5, insert k=30 -> payload dir spans k [5,30], ts [550,3000]
     Snapshots.commitMerge(
@@ -593,18 +593,18 @@ class ScaleSpec extends SparkSpec {
     assert(st.size == 3 && st.values.forall(m => m.contains("k") && m.contains("ts")),
       s"merge payload dir must carry stats on every established column: $st")
     // the merged dir spans [5,30]: a low-range probe skips it AND dir 2
-    assert(Snapshots.pruneCounts(spark, root, "k", 1L, 4L) == ((1, 2)))
+    assert(Snapshots.scanReport(spark, root, col("k").between(1L, 4L)) == ((1, 2)))
     // pruned == filtered on the merged state, for both stats columns
     for ((c, lo, hi) <- Seq(("k", 1L, 6L), ("k", 25L, 40L), ("ts", 1L, 600L))) {
       val full = Snapshots.read(spark, root)
         .filter(col(c).between(lo, hi)).as[(Long, Long, String)].collect().toSet
-      val prn = Snapshots.readPruned(spark, root, c, lo, hi)
+      val prn = Snapshots.read(spark, root, col(c).between(lo, hi), None)
         .as[(Long, Long, String)].collect().toSet
       assert(prn == full, s"pruned != filtered for $c [$lo,$hi]")
     }
     // a column NO dir has stats on: never skipped, never an error (the
     // round-15 behavior threw on mismatched stats columns)
-    assert(Snapshots.pruneCounts(spark, root, "v", 1L, 2L) == ((3, 0)))
+    assert(Snapshots.scanReport(spark, root, col("v").between(1L, 2L)) == ((3, 0)))
     // all-null stats column under the STRICT append contract: loud, and
     // the just-written dir is cleaned up (no orphan for vacuum)
     intercept[RuntimeException] {
@@ -617,7 +617,7 @@ class ScaleSpec extends SparkSpec {
       "failed strict-stats append must not leave an orphan dir")
   }
 
-  test("snapshots: position deletes — keyless row masking, sequence-scoped, compose with equality deletes") {
+  timedTest("snapshots: position deletes — keyless row masking, sequence-scoped, compose with equality deletes", 300) {
     import graft.ops.Snapshots
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("snappos").toString
@@ -644,8 +644,8 @@ class ScaleSpec extends SparkSpec {
     // equality deletes COMPOSE: delete k=3 by key; both masks apply
     Snapshots.commitDelete(Seq(Tuple1(3L)).toDF("k"), root, "k")
     assert(ks() == Set(1L, 5L, 8L))
-    // readPruned masks position deletes too (2 and 4 in range, masked)
-    assert(Snapshots.readPruned(spark, root, "k", 1L, 4L)
+    // the filtered read masks position deletes too (2 and 4 in range, masked)
+    assert(Snapshots.read(spark, root, col("k").between(1L, 4L), None)
       .as[(Long, String)].collect().map(_._1).toSet == Set(1L))
     // changesBetween across a pos-delete interval: exact-diff fallback
     val ch = Snapshots.changesBetween(spark, root, id2, id3)
@@ -852,7 +852,7 @@ class ScaleSpec extends SparkSpec {
     assert(Snapshots.read(spark, root2).count() == 4)
   }
 
-  test("snapshots: OPTIMIZE — rewrite preserves hidden layout, converges evolved specs, clustered split is range-disjoint (round-17)") {
+  timedTest("snapshots: OPTIMIZE — rewrite preserves hidden layout, converges evolved specs, clustered split is range-disjoint (round-17)", 300) {
     import graft.ops.Snapshots
     import graft.ops.Snapshots.TruncateTransform
     import spark.implicits._
@@ -872,8 +872,8 @@ class ScaleSpec extends SparkSpec {
     assert(cur.dataDirs.size == 4,
       s"per-value dirs must survive the rewrite, got ${cur.dataDirs}")
     // pruning still works: [0,9] opens value-0 + the null dir only
-    assert(Snapshots.hiddenRangeCounts(spark, root, t10, 0L, 9L) == ((2, 2)))
-    assert(Snapshots.readHiddenRange(spark, root, t10, 0L, 9L)
+    assert(Snapshots.scanReport(spark, root, col("v").between(0L, 9L)) == ((2, 2)))
+    assert(Snapshots.read(spark, root, col("v").between(0L, 9L), None)
       .select("k").as[Long].collect().toSet == Set(1L))
     assert(Snapshots.read(spark, root).select("k").as[Long]
       .collect().toSet == Set(1L, 2L, 3L, 5L), "rewrite lossless")
@@ -889,8 +889,8 @@ class ScaleSpec extends SparkSpec {
     assert(cur2.dataDirs.forall(d => cur2.stats.get(d).forall(m =>
       m.keys.forall(!_.startsWith("__pt_trunc_10_")))),
       "old-spec synthetic stats must not survive the converging rewrite")
-    assert(Snapshots.hiddenRangeCounts(spark, root, t100, 100L, 199L) == ((2, 2)))
-    assert(Snapshots.readHiddenRange(spark, root, t100, 100L, 199L)
+    assert(Snapshots.scanReport(spark, root, col("v").between(100L, 199L)) == ((2, 2)))
+    assert(Snapshots.read(spark, root, col("v").between(100L, 199L), None)
       .select("k").as[Long].collect().toSet == Set(6L))
     // 3) clustered rewrite of a plain table: explicit parts → that many
     // range-disjoint dirs, stats on the sort key, point probe opens 1
@@ -911,9 +911,9 @@ class ScaleSpec extends SparkSpec {
       case _ => true
     }, s"clustered dirs must be range-disjoint: $ranges")
     // a point probe opens exactly one dir (range stats + rebuilt bloom)
-    assert(Snapshots.pruneCounts(spark, root2, "k", 42L, 42L) == ((1, 3)))
-    assert(Snapshots.pointCounts(spark, root2, "k", 42L) == ((1, 3)))
-    assert(Snapshots.readPoint(spark, root2, "k", 42L)
+    assert(Snapshots.scanReport(spark, root2, col("k").between(42L, 42L)) == ((1, 3)))
+    assert(Snapshots.scanReport(spark, root2, col("k") === 42L) == ((1, 3)))
+    assert(Snapshots.read(spark, root2, col("k") === 42L, None)
       .select("v").as[String].collect().toSeq == Seq("v42"))
     // lossless: full read equals the undeleted key set
     assert(Snapshots.read(spark, root2).select("k").as[Long].collect().toSet
@@ -924,7 +924,7 @@ class ScaleSpec extends SparkSpec {
     assert(Snapshots.read(spark, root2).count() == (n - n / 10))
   }
 
-  test("snapshots: string stats bounds — truncated byte bounds prune, survive rename/merge/rewrite, edge cases sound (round-17)") {
+  timedTest("snapshots: string stats bounds — truncated byte bounds prune, survive rename/merge/rewrite, edge cases sound (round-17)", 300) {
     import graft.ops.Snapshots
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("snapstr").toString
@@ -939,15 +939,15 @@ class ScaleSpec extends SparkSpec {
       Seq(("xigua", 5L), ("yuzu", 6L)).toDF("id", "v"), root,
       Seq("id"), None)
     Snapshots.commitAppend(Seq(("kiwi", 7L)).toDF("id", "v"), root)
-    assert(Snapshots.pruneCountsStr(spark, root, "id", "a", "az") == ((2, 2)))
-    assert(Snapshots.readPrunedStr(spark, root, "id", "a", "az")
+    assert(Snapshots.scanReport(spark, root, col("id").between("a", "az")) == ((2, 2)))
+    assert(Snapshots.read(spark, root, col("id").between("a", "az"), None)
       .select("id").as[String].collect().toSet == Set("apple", "avocado"))
     // out-of-range probe: only the stats-less dir opens, zero rows
-    assert(Snapshots.pruneCountsStr(spark, root, "id", "zz", "zzz") == ((1, 3)))
-    assert(Snapshots.readPrunedStr(spark, root, "id", "zz", "zzz").count() == 0)
+    assert(Snapshots.scanReport(spark, root, col("id").between("zz", "zzz")) == ((1, 3)))
+    assert(Snapshots.read(spark, root, col("id").between("zz", "zzz"), None).count() == 0)
     // deletes compose (string delete key), and a rename REMAPS bounds
     Snapshots.commitDelete(Seq(Tuple1("melon")).toDF("id"), root, "id")
-    assert(Snapshots.readPrunedStr(spark, root, "id", "m", "n")
+    assert(Snapshots.read(spark, root, col("id").between("m", "n"), None)
       .select("id").as[String].collect().toSeq == Seq("mango"))
     // TRUNCATION soundness: >16-byte keys sharing a 16-byte prefix must
     // never be skipped by a probe inside the shared-prefix range — the
@@ -958,18 +958,18 @@ class ScaleSpec extends SparkSpec {
     Snapshots.commitAppendStats(
       Seq((longA, 1L), (longB, 2L)).toDF("id", "v"), root2, Seq("id"), None)
     // probe equal to a full key (longer than the truncated bound): must open
-    assert(Snapshots.pruneCountsStr(spark, root2, "id", longA, longA) == ((1, 0)))
-    assert(Snapshots.readPrunedStr(spark, root2, "id", longA, longA)
+    assert(Snapshots.scanReport(spark, root2, col("id").between(longA, longA)) == ((1, 0)))
+    assert(Snapshots.read(spark, root2, col("id").between(longA, longA), None)
       .count() == 1)
     // probe past the shared prefix: rightly skipped
-    assert(Snapshots.pruneCountsStr(spark, root2, "id", "Q", "R") == ((0, 1)))
+    assert(Snapshots.scanReport(spark, root2, col("id").between("Q", "R")) == ((0, 1)))
     // empty-string and non-ASCII values round the manifest safely
     val root3 = java.nio.file.Files.createTempDirectory("snapstr3").toString
     Snapshots.commitAppendStats(
       Seq(("", 1L), ("ééééééééééé", 2L)).toDF("id", "v"), root3,
       Seq("id"), None) // 11 é = 22 UTF-8 bytes > 16: truncated upper
-    assert(Snapshots.pruneCountsStr(spark, root3, "id", "", "zz") == ((1, 0)))
-    assert(Snapshots.readPrunedStr(spark, root3, "id", "é", "éż")
+    assert(Snapshots.scanReport(spark, root3, col("id").between("", "zz")) == ((1, 0)))
+    assert(Snapshots.read(spark, root3, col("id").between("é", "éż"), None)
       .select("v").as[Long].collect().toSeq == Seq(2L))
     // bloom point lookups on a string key; merge keeps sstats on its
     // payload dir; clustered rewrite on a STRING sort key re-records
@@ -982,10 +982,10 @@ class ScaleSpec extends SparkSpec {
         bloomCol = "id", statsCols = Seq("id"))
     // ranges of the three mod-class dirs overlap fully: only the bloom
     // can skip, and it does for an absent key
-    assert(Snapshots.pointCountsStr(spark, root4, "id", "DOC-9999") == ((0, 3)))
-    val hit = Snapshots.pointCountsStr(spark, root4, "id", "DOC-0042")
+    assert(Snapshots.scanReport(spark, root4, col("id") === "DOC-9999") == ((0, 3)))
+    val hit = Snapshots.scanReport(spark, root4, col("id") === "DOC-0042")
     assert(hit._1 >= 1 && hit._1 <= 2, s"bloom fp budget: $hit")
-    assert(Snapshots.readPointStr(spark, root4, "id", "DOC-0042")
+    assert(Snapshots.read(spark, root4, col("id") === "DOC-0042", None)
       .select("v").as[Long].collect().toSeq == Seq(42L))
     Snapshots.commitMerge(
       Seq(("DOC-0042", 420L), ("DOC-0061", 61L)).toDF("id", "v"),
@@ -998,16 +998,16 @@ class ScaleSpec extends SparkSpec {
     assert(cr.dataDirs.size == 3 &&
       cr.dataDirs.forall(d => cr.sstats.get(d).exists(_.contains("id"))),
       "clustered string rewrite must record per-dir bounds")
-    assert(Snapshots.pruneCountsStr(spark, root4, "id", "DOC-0001", "DOC-0005")
+    assert(Snapshots.scanReport(spark, root4, col("id").between("DOC-0001", "DOC-0005"))
       ._2 == 2, "post-rewrite string pruning must skip the other dirs")
-    assert(Snapshots.readPointStr(spark, root4, "id", "DOC-0042")
+    assert(Snapshots.read(spark, root4, col("id") === "DOC-0042", None)
       .select("v").as[Long].collect().toSeq == Seq(420L))
     // rename remaps string bounds to the new logical name
     Snapshots.commitRenameColumn(spark, root, "v", "val")
-    assert(Snapshots.pruneCountsStr(spark, root, "id", "a", "az") == ((2, 2)))
+    assert(Snapshots.scanReport(spark, root, col("id").between("a", "az")) == ((2, 2)))
   }
 
-  test("snapshots: partition-spec evolution — each dir generation prunes under its own spec (round-17)") {
+  timedTest("snapshots: partition-spec evolution — each dir generation prunes under its own spec (round-17)", 300) {
     import graft.ops.Snapshots
     import graft.ops.Snapshots.{BucketTransform, TruncateTransform}
     import spark.implicits._
@@ -1023,23 +1023,23 @@ class ScaleSpec extends SparkSpec {
     val cur = Snapshots.current(spark, root).get
     assert(cur.dataDirs.size == 12, s"4 + 8 occupied buckets: ${cur.dataDirs}")
     // k=30: residue 2 mod 4 and 6 mod 8 — one dir per generation
-    assert(Snapshots.hiddenPointAutoCounts(spark, root, "k", 30L) == ((2, 10)))
-    assert(Snapshots.readHiddenPointAuto(spark, root, "k", 30L)
+    assert(Snapshots.scanReport(spark, root, col("k") === 30L) == ((2, 10)))
+    assert(Snapshots.read(spark, root, col("k") === 30L, None)
       .select("v").as[String].collect().toSeq == Seq("b30"))
     // k=7 lives in generation 1 only; its gen-2 residue dir still opens
     // (pruning is per-dir contract, not content knowledge)
-    assert(Snapshots.hiddenPointAutoCounts(spark, root, "k", 7L) == ((2, 10)))
-    assert(Snapshots.readHiddenPointAuto(spark, root, "k", 7L)
+    assert(Snapshots.scanReport(spark, root, col("k") === 7L) == ((2, 10)))
+    assert(Snapshots.read(spark, root, col("k") === 7L, None)
       .select("v").as[String].collect().toSeq == Seq("a7"))
     // a range spanning >= 8 consecutive values admits every bucket
-    assert(Snapshots.hiddenAutoCounts(spark, root, "k", 1L, 40L) == ((12, 0)))
+    assert(Snapshots.scanReport(spark, root, col("k").between(1L, 40L)) == ((12, 0)))
     // a 2-value range admits 2 residues per generation
-    assert(Snapshots.hiddenAutoCounts(spark, root, "k", 9L, 10L) == ((4, 8)))
-    assert(Snapshots.readHiddenAuto(spark, root, "k", 9L, 10L)
+    assert(Snapshots.scanReport(spark, root, col("k").between(9L, 10L)) == ((4, 8)))
+    assert(Snapshots.read(spark, root, col("k").between(9L, 10L), None)
       .select("k").as[Long].collect().toSet == Set(9L, 10L))
     // deletes mask across generations as everywhere
     Snapshots.commitDelete(Seq(Tuple1(30L)).toDF("k"), root, "k")
-    assert(Snapshots.readHiddenPointAuto(spark, root, "k", 30L).count() == 0)
+    assert(Snapshots.read(spark, root, col("k") === 30L, None).count() == 0)
     // truncate evolution: day-width then week-width generations; a
     // range probe opens matching days + matching weeks
     val root2 = java.nio.file.Files.createTempDirectory("snapspec2").toString
@@ -1050,20 +1050,20 @@ class ScaleSpec extends SparkSpec {
       Seq((4L, 35L), (5L, 95L)).toDF("k", "t"), root2,
       TruncateTransform("t", 50L))
     // [0,9]: day-dir value 0 opens; week dirs 0 (t=35) opens, 1 (t=95) skips
-    assert(Snapshots.hiddenAutoCounts(spark, root2, "t", 0L, 9L) == ((2, 3)))
-    assert(Snapshots.readHiddenAuto(spark, root2, "t", 0L, 9L)
+    assert(Snapshots.scanReport(spark, root2, col("t").between(0L, 9L)) == ((2, 3)))
+    assert(Snapshots.read(spark, root2, col("t").between(0L, 9L), None)
       .select("k").as[Long].collect().toSet == Set(1L))
     // [90,99]: only week dir 1
-    assert(Snapshots.hiddenAutoCounts(spark, root2, "t", 90L, 99L) == ((1, 4)))
-    assert(Snapshots.readHiddenAuto(spark, root2, "t", 90L, 99L)
+    assert(Snapshots.scanReport(spark, root2, col("t").between(90L, 99L)) == ((1, 4)))
+    assert(Snapshots.read(spark, root2, col("t").between(90L, 99L), None)
       .select("k").as[Long].collect().toSet == Set(5L))
     // OPTIMIZE converges the mixed history to the newest spec and the
     // auto reads keep pruning (composition with s37)
     Snapshots.commitRewrite(spark, root2)
     val c2 = Snapshots.current(spark, root2).get
     assert(c2.dataDirs.size == 2, s"weeks 0 and 1: ${c2.dataDirs}")
-    assert(Snapshots.hiddenAutoCounts(spark, root2, "t", 90L, 99L) == ((1, 1)))
-    assert(Snapshots.readHiddenAuto(spark, root2, "t", 0L, 29L)
+    assert(Snapshots.scanReport(spark, root2, col("t").between(90L, 99L)) == ((1, 1)))
+    assert(Snapshots.read(spark, root2, col("t").between(0L, 29L), None)
       .select("k").as[Long].collect().toSet == Set(1L, 2L, 3L))
   }
 
@@ -1121,7 +1121,7 @@ class ScaleSpec extends SparkSpec {
     assert(Snapshots.read(spark, root, Some(id1)).count() == 4)
   }
 
-  test("snapshots: multi-dimensional hidden partitioning — tuple dirs, conjunctive pruning, rewrite preserves both axes (round-17)") {
+  timedTest("snapshots: multi-dimensional hidden partitioning — tuple dirs, conjunctive pruning, rewrite preserves both axes (round-17)", 300) {
     import graft.ops.Snapshots
     import graft.ops.Snapshots.{BucketTransform, TruncateTransform}
     import spark.implicits._
@@ -1136,14 +1136,13 @@ class ScaleSpec extends SparkSpec {
     val cur = Snapshots.current(spark, root).get
     assert(cur.dataDirs.size == 5, s"one dir per tuple + null: ${cur.dataDirs}")
     // each axis prunes independently...
-    assert(Snapshots.hiddenAutoCounts(spark, root, "t", 0L, 9L) == ((3, 2)))
-    assert(Snapshots.hiddenAutoCounts(spark, root, "u", 1L, 1L) == ((3, 2)))
+    assert(Snapshots.scanReport(spark, root, col("t").between(0L, 9L)) == ((3, 2)))
+    assert(Snapshots.scanReport(spark, root, col("u").between(1L, 1L)) == ((3, 2)))
     // ...and a conjunctive predicate prunes MULTIPLICATIVELY: day 0 AND
     // u=1 admits the (0,1) dir + the null-t dir (bucket 1) only
-    assert(Snapshots.hiddenAutoMultiCounts(spark, root,
-      Seq(("t", 0L, 9L), ("u", 1L, 1L))) == ((2, 3)))
-    assert(Snapshots.readHiddenAutoMulti(spark, root,
-      Seq(("t", 0L, 9L), ("u", 1L, 1L)))
+    val day0u1 = col("t").between(0L, 9L) && col("u") === 1L
+    assert(Snapshots.scanReport(spark, root, day0u1) == ((2, 3)))
+    assert(Snapshots.read(spark, root, day0u1, None)
       .select("k").as[Long].collect().toSet == Set(1L))
     // deletes mask; rewrite preserves BOTH axes (tuple dirs + stats)
     Snapshots.commitDelete(Seq(Tuple1(2L)).toDF("k"), root, "k")
@@ -1152,12 +1151,12 @@ class ScaleSpec extends SparkSpec {
     // k=2's (0,2) tuple lost its only row — 4 surviving tuple dirs
     assert(cur2.dataDirs.size == 4, s"tuple layout must survive: ${cur2.dataDirs}")
     assert(cur2.deleteDirs.isEmpty)
-    assert(Snapshots.hiddenAutoMultiCounts(spark, root,
-      Seq(("t", 0L, 9L), ("u", 2L, 2L))) == ((0, 4)),
+    assert(Snapshots.scanReport(spark, root,
+      col("t").between(0L, 9L) && col("u") === 2L) == ((0, 4)),
       "post-rewrite conjunctive pruning must hold on both axes " +
         "(the null-t dir still carries its bucket line)")
-    assert(Snapshots.readHiddenAutoMulti(spark, root,
-      Seq(("t", 0L, 29L), ("u", 1L, 5L)))
+    assert(Snapshots.read(spark, root,
+      col("t").between(0L, 29L) && col("u").between(1L, 5L), None)
       .select("k").as[Long].collect().toSet == Set(1L, 3L, 4L))
     assert(Snapshots.read(spark, root).count() == 4)
   }
@@ -1232,7 +1231,7 @@ class ScaleSpec extends SparkSpec {
     assert(ks(3000, 10000) == s30 - victim - victim2)
   }
 
-  test("snapshots: bloom point-lookup skipping — one-sided error, survives merge/rewrite, degrades safely") {
+  timedTest("snapshots: bloom point-lookup skipping — one-sided error, survives merge/rewrite, degrades safely", 300) {
     import graft.ops.Snapshots
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("snapbloom").toString
@@ -1246,19 +1245,24 @@ class ScaleSpec extends SparkSpec {
     Snapshots.commitAppend(
       Seq((300L, "bare")).toDF("k", "v"), root) // no bloom: always opened
     def point(v: Long) =
-      Snapshots.readPoint(spark, root, "k", v).as[(Long, String)].collect().toSet
+      Snapshots.read(spark, root, col("k") === v, None).as[(Long, String)].collect().toSet
     // a value in dir 2: dirs 1/3 bloom-skip, bare dir opens
-    assert(Snapshots.pointCounts(spark, root, "k", 120L) == ((2, 2)))
+    assert(Snapshots.scanReport(spark, root, col("k") === 120L) == ((2, 2)))
     assert(point(120L) == Set((120L, "b120")))
+    // a STRING probe of the long column: Spark casts it, a long Bloom
+    // cannot answer it — every dir opens and the row is still found
+    assert(Snapshots.scanReport(spark, root, col("k") === "120") == ((4, 0)))
+    assert(Snapshots.read(spark, root, col("k") === "120", None)
+      .as[(Long, String)].collect().toSet == Set((120L, "b120")))
     // a value absent everywhere: every bloom'd dir skips
-    assert(Snapshots.pointCounts(spark, root, "k", 999L) == ((1, 3)))
+    assert(Snapshots.scanReport(spark, root, col("k") === 999L) == ((1, 3)))
     assert(point(999L).isEmpty)
-    // ONE-SIDED error sweep: readPoint == full filtered read for every
+    // ONE-SIDED error sweep: point read == full filtered read for every
     // present key (a Bloom may open extra dirs, it may never lose a row)
     for (v <- Seq(1L, 50L, 100L, 150L, 200L, 250L, 300L)) {
       val full = Snapshots.read(spark, root).filter(col("k") === v)
         .as[(Long, String)].collect().toSet
-      assert(point(v) == full, s"readPoint lost rows for k=$v")
+      assert(point(v) == full, s"point read lost rows for k=$v")
     }
     // equality deletes still mask under point skipping
     Snapshots.commitDelete(Seq(Tuple1(120L)).toDF("k"), root, "k")
@@ -1267,20 +1271,20 @@ class ScaleSpec extends SparkSpec {
     Snapshots.commitMerge(Seq((400L, "m")).toDF("k", "v"), root, "k")
     val merged = Snapshots.current(spark, root).get
     assert(merged.blooms.size == 4, s"merge payload must carry a bloom: ${merged.blooms}")
-    assert(Snapshots.pointCounts(spark, root, "k", 400L) == ((2, 3)))
+    assert(Snapshots.scanReport(spark, root, col("k") === 400L) == ((2, 3)))
     assert(point(400L) == Set((400L, "m")))
     // REWRITE rebuilds the bloom on the single rewritten dir
     Snapshots.commitRewrite(spark, root)
     val rw = Snapshots.current(spark, root).get
     assert(rw.blooms.size == 1 && rw.blooms.values.head == Seq("k"))
-    assert(Snapshots.pointCounts(spark, root, "k", 999L) == ((0, 1)))
+    assert(Snapshots.scanReport(spark, root, col("k") === 999L) == ((0, 1)))
     assert(point(200L) == Set((200L, "c200")))
     // a marked bloom whose sidecar vanished degrades to OPEN, not error
     val dirName = rw.blooms.keys.head
     val side = new org.apache.hadoop.fs.Path(root, s"$dirName/_bloom_k")
     side.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(side, false)
-    assert(Snapshots.pointCounts(spark, root, "k", 999L) == ((1, 0)))
+    assert(Snapshots.scanReport(spark, root, col("k") === 999L) == ((1, 0)))
     assert(point(200L) == Set((200L, "c200")))
   }
 
@@ -1331,7 +1335,7 @@ class ScaleSpec extends SparkSpec {
       "rewrite must read as zero row-level changes")
   }
 
-  test("snapshots: rollback — target state restored, history preserved, non-ancestors refused (round-16)") {
+  timedTest("snapshots: rollback — target state restored, history preserved, non-ancestors refused (round-16)", 300) {
     import graft.ops.Snapshots
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("snaprb").toString
@@ -1348,7 +1352,7 @@ class ScaleSpec extends SparkSpec {
     // history preserved: the rolled-over delete snapshot still reads
     assert(ks(Snapshots.read(spark, root, Some(id2))) == Set(1L, 3L))
     // stats ride the rollback manifest: pruning still works on the head
-    val (opened, skipped) = Snapshots.pruneCounts(spark, root, "k", 99L, 100L)
+    val (opened, skipped) = Snapshots.scanReport(spark, root, col("k").between(99L, 100L))
     assert(opened == 0 && skipped == 1, s"stats lost: $opened/$skipped")
     // commits continue on top; rollback-of-rollback returns to the
     // intermediate (post-delete) state
@@ -1371,7 +1375,7 @@ class ScaleSpec extends SparkSpec {
     assert(ks(Snapshots.read(spark, root)) == Set(1L, 2L, 3L))
   }
 
-  test("snapshots: metadata-only rename/drop — name mapping, skipping survives, re-add safe (round-16)") {
+  timedTest("snapshots: metadata-only rename/drop — name mapping, skipping survives, re-add safe (round-16)", 300) {
     import graft.ops.Snapshots
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("snapevo").toString
@@ -1390,11 +1394,11 @@ class ScaleSpec extends SparkSpec {
     assert(Snapshots.read(spark, root, Some(id1)).columns.toSeq ==
       Seq("k", "v", "x"))
     // range stats were remapped: pruning on the NEW name skips the old dir
-    assert(Snapshots.pruneCounts(spark, root, "value", 25L, 40L) == ((1, 1)))
+    assert(Snapshots.scanReport(spark, root, col("value").between(25L, 40L)) == ((1, 1)))
     // bloom skipping on the NEW name consults the old dir's physical
     // sidecar (_bloom_v): value=10 opens dir1 only (ranges exclude dir2)
-    assert(Snapshots.pointCounts(spark, root, "value", 10L) == ((1, 1)))
-    assert(Snapshots.readPoint(spark, root, "value", 10L)
+    assert(Snapshots.scanReport(spark, root, col("value") === 10L) == ((1, 1)))
+    assert(Snapshots.read(spark, root, col("value") === 10L, None)
       .select("k").as[Long].collect().toSeq == Seq(1L))
     // rename CHAIN: value -> val2; both hops apply to the oldest dir
     Snapshots.commitRenameColumn(spark, root, "value", "val2")
@@ -1430,7 +1434,7 @@ class ScaleSpec extends SparkSpec {
     assert(post == Set((1L, 10L), (3L, 30L), (4L, 40L)))
   }
 
-  test("snapshots: hidden partitioning — per-value dirs, raw-predicate pruning, null dir opens (round-16)") {
+  timedTest("snapshots: hidden partitioning — per-value dirs, raw-predicate pruning, null dir opens (round-16)", 300) {
     import graft.ops.Snapshots
     import graft.ops.Snapshots.{TruncateTransform, BucketTransform}
     import spark.implicits._
@@ -1443,13 +1447,13 @@ class ScaleSpec extends SparkSpec {
     assert(Snapshots.current(spark, root).get.dataDirs.size == 4)
     // raw predicate [0,9] → value-0 dir opens, the stats-less null dir
     // ALWAYS opens (degrade-safe), values 1 and 2 skip
-    assert(Snapshots.hiddenRangeCounts(spark, root, t10, 0L, 9L) == ((2, 2)))
-    assert(Snapshots.readHiddenRange(spark, root, t10, 0L, 9L)
+    assert(Snapshots.scanReport(spark, root, col("v").between(0L, 9L)) == ((2, 2)))
+    assert(Snapshots.read(spark, root, col("v").between(0L, 9L), None)
       .select("k").as[Long].collect().toSet == Set(1L, 4L))
     // later commits add dirs; equality deletes mask across hidden dirs
     Snapshots.commitAppendHidden(Seq((6L, Some(8L))).toDF("k", "v"), root, t10)
     Snapshots.commitDelete(Seq(Tuple1(4L)).toDF("k"), root, "k")
-    assert(Snapshots.readHiddenRange(spark, root, t10, 0L, 9L)
+    assert(Snapshots.read(spark, root, col("v").between(0L, 9L), None)
       .select("k").as[Long].collect().toSet == Set(1L, 6L))
     // the plain read sees everything, incl. the null-value row
     assert(Snapshots.read(spark, root).count() == 5)
@@ -1460,12 +1464,12 @@ class ScaleSpec extends SparkSpec {
       Seq((1L, 3L), (2L, 7L), (3L, 4L), (4L, 11L)).toDF("k", "v"), broot, b4)
     // buckets: 3,3,0,3 → two dirs
     assert(Snapshots.current(spark, broot).get.dataDirs.size == 2)
-    assert(Snapshots.hiddenPointCounts(spark, broot, b4, 7L) == ((1, 1)))
-    assert(Snapshots.readHiddenPoint(spark, broot, b4, 7L)
+    assert(Snapshots.scanReport(spark, broot, col("v") === 7L) == ((1, 1)))
+    assert(Snapshots.read(spark, broot, col("v") === 7L, None)
       .select("k").as[Long].collect().toSeq == Seq(2L))
     // an unoccupied bucket opens NOTHING and returns the empty frame
-    assert(Snapshots.hiddenPointCounts(spark, broot, b4, 5L) == ((0, 2)))
-    assert(Snapshots.readHiddenPoint(spark, broot, b4, 5L).count() == 0)
+    assert(Snapshots.scanReport(spark, broot, col("v") === 5L) == ((0, 2)))
+    assert(Snapshots.read(spark, broot, col("v") === 5L, None).count() == 0)
   }
 
   test("schema-evolution model test: random rename/drop/add/append/delete/rewrite sequences match a reference simulation") {
@@ -1553,7 +1557,7 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("hidden partitioning property: readHiddenRange == read().filter for random ranges") {
+  timedTest("hidden partitioning property: readHiddenRange == read().filter for random ranges", 300) {
     import graft.ops.Snapshots
     import graft.ops.Snapshots.TruncateTransform
     import spark.implicits._
@@ -1575,7 +1579,7 @@ class ScaleSpec extends SparkSpec {
     for (_ <- 1 to 12) {
       val lo = nextInt(50).toLong
       val hi = lo + nextInt(20)
-      val fast = Snapshots.readHiddenRange(spark, root, t, lo, hi)
+      val fast = Snapshots.read(spark, root, $"v".between(lo, hi), None)
         .select("k").as[Long].collect().toSet
       val slow = Snapshots.read(spark, root)
         .filter($"v".between(lo, hi)).select("k").as[Long].collect().toSet
@@ -1686,7 +1690,7 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("snapshots: STRING hidden partitioning — truncate-prefix dirs prune ranges, md5 buckets prune points, edges sound (round-18)") {
+  timedTest("snapshots: STRING hidden partitioning — truncate-prefix dirs prune ranges, md5 buckets prune points, edges sound (round-18)", 300) {
     import graft.ops.Snapshots
     import graft.ops.Snapshots.{BucketStrTransform, TruncateStrTransform}
     import spark.implicits._
@@ -1701,18 +1705,19 @@ class ScaleSpec extends SparkSpec {
     // values: phs0 (x2 rows, 1 dir), phs1, stu0, null dir
     assert(cur.dataDirs.size == 4, s"per-prefix dirs: ${cur.dataDirs}")
     // range confined to the phs0 prefix opens phs0 + the null dir only
-    assert(Snapshots.hiddenRangeStrCounts(spark, root, t4,
-      "phs000000", "phs000999") == ((2, 2)))
-    assert(Snapshots.readHiddenRangeStr(spark, root, t4,
-      "phs000000", "phs000999").select("n").as[Long]
+    assert(Snapshots.scanReport(spark, root,
+      col("id").between("phs000000", "phs000999")) == ((2, 2)))
+    assert(Snapshots.read(spark, root,
+      col("id").between("phs000000", "phs000999"), None).select("n").as[Long]
       .collect().toSet == Set(1L, 2L))
     // prefix-EQUAL bounds (lo == hi == a full prefix): one value dir
-    assert(Snapshots.readHiddenRangeStr(spark, root, t4,
-      "phs111222", "phs111222").select("n").as[Long]
+    assert(Snapshots.read(spark, root,
+      col("id").between("phs111222", "phs111222"), None).select("n").as[Long]
       .collect().toSet == Set(3L))
     // result equals the unpruned filter for a cross-prefix range
-    assert(Snapshots.readHiddenRangeStr(spark, root, t4,
-      "phs000500", "stu999999").select("n").as[Long].collect().toSet ==
+    assert(Snapshots.read(spark, root,
+      col("id").between("phs000500", "stu999999"), None)
+      .select("n").as[Long].collect().toSet ==
       Snapshots.read(spark, root)
         .filter("id between 'phs000500' and 'stu999999'")
         .select("n").as[Long].collect().toSet)
@@ -1725,12 +1730,12 @@ class ScaleSpec extends SparkSpec {
         .toDF("id", "n"), root2, t3)
     // "é" = 0xC3A9: an ASCII-only range must not open its dir; the
     // multi-byte dir still opens for a covering range
-    val all = Snapshots.readHiddenRangeStr(spark, root2, t3, "", "￿￿")
+    val all = Snapshots.read(spark, root2, col("id").between("", "￿￿"), None)
     assert(all.select("n").as[Long].collect().toSet == Set(0L, 1L, 2L, 3L, 4L))
-    assert(Snapshots.readHiddenRangeStr(spark, root2, t3, "", "b")
+    assert(Snapshots.read(spark, root2, col("id").between("", "b"), None)
       .select("n").as[Long].collect().toSet == Set(0L, 1L))
     val (oAscii, sAscii) =
-      Snapshots.hiddenRangeStrCounts(spark, root2, t3, "", "b")
+      Snapshots.scanReport(spark, root2, col("id").between("", "b"))
     assert(oAscii == 2 && sAscii == 3,
       s"ASCII range must skip the multi-byte dirs: ($oAscii, $sAscii)")
     // 3) md5-48 string bucket: a point lookup opens one bucket
@@ -1740,17 +1745,17 @@ class ScaleSpec extends SparkSpec {
       (1 to 40).map(i => (s"doc$i", i.toLong)).toDF("id", "n"), root3, b4)
     val dirs3 = Snapshots.current(spark, root3).get.dataDirs.size
     assert(dirs3 >= 2 && dirs3 <= 4, s"bucket dirs: $dirs3")
-    val (op, sk) = Snapshots.hiddenPointStrCounts(spark, root3, b4, "doc7")
+    val (op, sk) = Snapshots.scanReport(spark, root3, col("id") === "doc7")
     assert(op == 1 && sk == dirs3 - 1)
-    assert(Snapshots.readHiddenPointStr(spark, root3, b4, "doc7")
+    assert(Snapshots.read(spark, root3, col("id") === "doc7", None)
       .select("n").as[Long].collect().toSeq == Seq(7L))
     // 4) the spec is a FIRST-CLASS spec: rewrite preserves it, rename
     // of the source column is refused
     Snapshots.commitDelete(Seq(Tuple1("doc7")).toDF("id"), root3, "id")
     Snapshots.commitRewrite(spark, root3)
-    assert(Snapshots.readHiddenPointStr(spark, root3, b4, "doc8")
+    assert(Snapshots.read(spark, root3, col("id") === "doc8", None)
       .select("n").as[Long].collect().toSeq == Seq(8L))
-    assert(Snapshots.readHiddenPointStr(spark, root3, b4, "doc7").count() == 0)
+    assert(Snapshots.read(spark, root3, col("id") === "doc7", None).count() == 0)
     intercept[IllegalArgumentException] {
       Snapshots.commitRenameColumn(spark, root3, "id", "key")
     }
@@ -1760,12 +1765,11 @@ class ScaleSpec extends SparkSpec {
     (1 to 8).foreach { _ =>
       val a = ids(rnd.nextInt(ids.size)); val b = ids(rnd.nextInt(ids.size))
       val (lo, hi) = if (a <= b) (a, b) else (b, a)
-      // root3's spec is the BUCKET transform: a truncstr range read
-      // finds no truncstr stats → opens everything, stays exact
+      // root3's spec is the string BUCKET transform, which judges
+      // single values only: a range opens everything and stays exact
       // (skipping is only ever an optimization)
-      val t = TruncateStrTransform("id", 4)
-      val pruned = Snapshots.readHiddenRangeStr(spark, root3, t,
-        lo, hi).select("n").as[Long].collect().toSet
+      val pruned = Snapshots.read(spark, root3, col("id").between(lo, hi),
+        None).select("n").as[Long].collect().toSet
       val plain = Snapshots.read(spark, root3)
         .filter(s"id between '$lo' and '$hi'")
         .select("n").as[Long].collect().toSet
@@ -1794,7 +1798,7 @@ class ScaleSpec extends SparkSpec {
     assert(ch.filter("op = 'I'").count() == 3)
   }
 
-  test("snapshots: disjunctive pruning property — OR/IN reads equal read().filter on random DNF predicates, and actually skip (round-18)") {
+  timedTest("snapshots: disjunctive pruning property — OR/IN reads equal read().filter on random DNF predicates, and actually skip (round-18)", 300) {
     import graft.ops.Snapshots
     import graft.ops.Snapshots.{BucketTransform, TruncateTransform}
     import spark.implicits._
@@ -1822,30 +1826,111 @@ class ScaleSpec extends SparkSpec {
         }
         conj.toList
       }
-      val viaDisj = Snapshots.readHiddenAutoDisj(spark, root, disjuncts)
-        .select("id").as[Long].collect().toSet
       val filter = disjuncts.map(c =>
         c.map(p => col(p._1).between(p._2, p._3)).reduce(_ && _))
         .reduce(_ || _)
+      val viaDisj = Snapshots.read(spark, root, filter, None)
+        .select("id").as[Long].collect().toSet
       val plain = Snapshots.read(spark, root).filter(filter)
         .select("id").as[Long].collect().toSet
       assert(viaDisj == plain, s"DNF $disjuncts")
     }
     // IN-list on the bucket axis: opened = occupied (day × residue)
     // pairs any listed residue admits; never the whole table
-    val (o, s0) = Snapshots.hiddenAutoInCounts(spark, root, "k",
-      Seq(0L, 5L))
+    val (o, s0) = Snapshots.scanReport(spark, root, col("k").isin(0L, 5L))
     assert(o > 0 && s0 > 0, s"IN-list must skip some dirs: ($o, $s0)")
-    assert(Snapshots.readHiddenAutoIn(spark, root, "k", Seq(0L, 5L))
+    assert(Snapshots.read(spark, root, col("k").isin(0L, 5L), None)
       .select("id").as[Long].collect().toSet ==
       Snapshots.read(spark, root).filter("k in (0, 5)")
         .select("id").as[Long].collect().toSet)
     // degenerate: an all-excluding DNF returns the empty typed frame
-    assert(Snapshots.readHiddenAutoDisj(spark, root,
-      Seq(Seq(("t", 5000L, 6000L)))).count() == 0)
+    assert(Snapshots.read(spark, root, col("t").between(5000L, 6000L), None)
+      .count() == 0)
   }
 
-  test("snapshots: grouped manifest scan — plan is O(delete commits + schema ops), not O(dirs); reads stay exact (round-18)") {
+  timedTest("snapshots: filtered read property — random AND/OR/IN/range trees over every pruning contract equal read().filter and open every dir holding a match", 600) {
+    import graft.ops.Snapshots
+    import graft.ops.Snapshots.{BucketTransform, TruncateStrTransform, TruncateTransform}
+    import org.apache.spark.sql.Column
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.Prop.propBoolean
+    import spark.implicits._
+    // ONE table carrying every contract the admit path judges: Long
+    // min/max and string byte bounds, k and s Bloom sidecars, hidden
+    // bucket(8) → bucket(16) → truncate(10) generations on k (negative
+    // and null k included — the sign rule and the null-value dir), a
+    // string-truncate generation on s, and an equality delete on top
+    val root = java.nio.file.Files.createTempDirectory("snapfilt").toString
+    val rnd = new scala.util.Random(7)
+    val prefixes = Seq("a", "m", "z", "é")
+    var nextId = 0L
+    def rows(n: Int, kLo: Long, kHi: Long) = (1 to n).map { _ =>
+      nextId += 1
+      val k = if (rnd.nextInt(12) == 0) None
+        else Some(kLo + rnd.nextInt((kHi - kLo + 1).toInt))
+      val s = if (rnd.nextInt(12) == 0) None
+        else Some(prefixes(rnd.nextInt(prefixes.size)) + f"${rnd.nextInt(40)}%02d")
+      (nextId, k, s)
+    }.toDF("id", "k", "s")
+    Snapshots.commitAppendStats(rows(15, -5L, 9L), root, Seq("k", "s"), None)
+    Snapshots.commitAppendStats(rows(15, 10L, 19L), root, Seq("k", "s"), None)
+    Snapshots.commitAppendBloom(rows(15, 20L, 29L), root, bloomCol = "k")
+    Snapshots.commitAppendBloom(rows(15, -5L, 60L), root, bloomCol = "s")
+    Snapshots.commitAppendHidden(rows(25, 30L, 45L), root, BucketTransform("k", 8))
+    Snapshots.commitAppendHidden(rows(25, 40L, 60L), root, BucketTransform("k", 16))
+    Snapshots.commitAppendHidden(rows(25, -5L, 60L), root, TruncateTransform("k", 10L))
+    Snapshots.commitAppendHidden(rows(20, -5L, 60L), root, TruncateStrTransform("s", 2))
+    Snapshots.commitDelete((1L to nextId by 7).toDF("id"), root, "id")
+    val nDirs = Snapshots.current(spark, root).get.dataDirs.size
+
+    val kv = Gen.choose(-8L, 64L)
+    val sv = Gen.oneOf(prefixes).flatMap(p =>
+      Gen.choose(0, 45).map(i => p + f"$i%02d"))
+    val leaf: Gen[Column] = Gen.oneOf(
+      kv.map(v => col("k") === v),
+      kv.map(v => col("k") === v.toInt),
+      for (a <- kv; w <- Gen.choose(0L, 12L)) yield col("k").between(a, a + w),
+      kv.map(v => col("k") >= v),
+      kv.map(v => col("k") < v),
+      Gen.listOfN(3, kv).map(vs => col("k").isin(vs: _*)),
+      sv.map(v => col("s") === v),
+      for (a <- sv; b <- sv) yield
+        if (a <= b) col("s").between(a, b) else col("s").between(b, a),
+      sv.map(v => col("s") > v),
+      Gen.listOfN(2, sv).map(vs => col("s").isin(vs: _*)),
+      Gen.const(col("s").rlike("^m1"))) // unreadable: admits every dir
+    def tree(depth: Int): Gen[Column] =
+      if (depth == 0) leaf
+      else Gen.frequency(
+        2 -> leaf,
+        1 -> Gen.zip(tree(depth - 1), tree(depth - 1)).map { case (l, r) => l && r },
+        1 -> Gen.zip(tree(depth - 1), tree(depth - 1)).map { case (l, r) => l || r })
+
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "k", "s").collect().map(_.toString).sorted.toSeq
+    var skippedSome = false
+    val prop = Prop.forAllNoShrink(tree(3)) { p =>
+      val got = rowsOf(Snapshots.read(spark, root, p, None))
+      val want = rowsOf(Snapshots.read(spark, root).filter(p))
+      val (opened, skipped) = Snapshots.scanReport(spark, root, p)
+      val openedDirs = Snapshots.openedDirs(spark, root,
+        Snapshots.current(spark, root).get, p)
+      val matchDirs = Snapshots.readWithPos(spark, root).filter(p)
+        .select("_dir").distinct().as[String].collect().toSet
+      skippedSome ||= skipped > 0
+      ((got == want) :| s"read($p) != read().filter($p)") &&
+        ((opened + skipped == nDirs) :| s"counts ($opened, $skipped) vs $nDirs dirs") &&
+        (matchDirs.subsetOf(openedDirs) :|
+          s"skipped a dir holding a live match of $p: ${matchDirs -- openedDirs}")
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(25).withInitialSeed(11L),
+      prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    assert(skippedSome, "no generated predicate skipped a single dir")
+  }
+
+  timedTest("snapshots: grouped manifest scan — plan is O(delete commits + schema ops), not O(dirs); reads stay exact (round-18)", 300) {
     import graft.ops.Snapshots
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     import spark.implicits._
@@ -1881,10 +1966,10 @@ class ScaleSpec extends SparkSpec {
     // pruning composes: a one-dir slice opens 1 grouped relation that
     // reads the surviving dirs only (runs split at the pruned gaps is
     // NOT required — skipped dirs just leave the run)
-    val sliced = Snapshots.readPruned(spark, root, "k", 10L, 12L)
+    val sliced = Snapshots.read(spark, root, col("k").between(10L, 12L), None)
     assert(sliced.select("k").as[Long].collect().toSet ==
       Set(10L, 11L, 12L))
-    val (opened, skipped) = Snapshots.pruneCounts(spark, root, "k", 10L, 12L)
+    val (opened, skipped) = Snapshots.scanReport(spark, root, col("k").between(10L, 12L))
     assert(opened == 3 && skipped == 72)
     // position deletes still mask exactly through the derived _dir
     val addr = Snapshots.readWithPos(spark, root)

@@ -1,14 +1,27 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalactic.source.Position
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for specs (one JVM-wide session; ScalaTest
   * runs suites sequentially in the forked test JVM). */
-trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits {
   lazy val spark: SparkSession = SparkSpec.session
   def sqlc = spark.sqlContext
+
+  /** A test with a wall-clock budget: past `seconds` the test thread is
+    * interrupted and the test fails under its own name, so a plan
+    * blow-up or a hung job cannot stall the whole suite. */
+  protected def timedTest(name: String, seconds: Int)(body: => Any)(
+      implicit pos: Position): Unit =
+    test(name) {
+      implicit val signaler: Signaler = ThreadSignaler
+      failAfter(Span(seconds, Seconds))(body)
+    }
 }
 
 object SparkSpec {
