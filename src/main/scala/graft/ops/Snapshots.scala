@@ -654,8 +654,7 @@ object Snapshots {
     // dir before rethrowing: the failed commit leaves NO orphan for
     // vacuum, matching the CommitConflict path's eager cleanup.
     val (newTyped, newBlooms) =
-      try (dirTypedStats(spark, new Path(tableDir, dataDir).toString,
-          statsCols, strict = true),
+      try (dirTypedStats(spark, tableDir, dataDir, statsCols, strict = true),
         buildBlooms(spark, tableDir, dataDir, bloomCols, strict = true))
       catch { case e: Throwable =>
         fs.delete(new Path(tableDir, dataDir), true); throw e
@@ -682,6 +681,74 @@ object Snapshots {
     won
   }
 
+  /** Per-file memo of [[dirSchema]], keyed by (path, length, mtime):
+    * table dirs are nonce-named and never rewritten, so a file's footer
+    * schema never changes under its key. Bounded like
+    * [[broadcastCache]]. */
+  private val footerSchemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), org.apache.spark.sql.types.StructType]()
+
+  /** The schema Spark's parquet inference gives one dir, read on the
+    * driver: the footer of the dir's first data file in path order
+    * (`_`/`.`-prefixed names — `_SUCCESS`, Bloom sidecars, checksums —
+    * skipped, as Spark's file index skips them), converted by Spark's
+    * own footer-to-schema code. Inference would run a one-task job for
+    * the same answer. None when the dir is missing or holds no data
+    * file. */
+  private def dirSchema(spark: SparkSession, dir: Path)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val listed =
+      try dir.getFileSystem(conf).listStatus(dir)
+      catch { case _: java.io.FileNotFoundException =>
+        Array.empty[org.apache.hadoop.fs.FileStatus] }
+    listed.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
+        !n.endsWith("._COPYING_")
+    }.sortBy(_.getPath.toString).headOption.map { st =>
+      val key = (st.getPath.toString, st.getLen, st.getModificationTime)
+      Option(footerSchemas.get(key)).getOrElse {
+        val schema = Shim.parquetFooterSchema(spark, st, conf)
+        if (footerSchemas.size > 1024) footerSchemas.clear()
+        footerSchemas.put(key, schema)
+        schema
+      }
+    }
+  }
+
+  /** THE reader for immutable table dirs (data runs, both delete kinds,
+    * stats and Bloom builds): one parquet relation over `dirs` with the
+    * schema `mergeSchema` inference would give — the per-dir footer
+    * schemas merged in path order — passed to `f` with the dirs it
+    * covers. No Spark job runs to plan it. A TYPE-widened set (an int
+    * append followed by a long append of the same column — legal, the
+    * union coerces it) cannot merge: then each dir is read and shaped
+    * by `f` on its own and the frames are unioned by name. A set with
+    * no data file at all keeps Spark's own inference, and its error. */
+  private def scanDirs(spark: SparkSession, tableDir: String,
+                       dirs: Seq[String])(
+      f: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
+    val paths = dirs.map(d => new Path(tableDir, d).toString)
+    val schemas = paths.sorted.flatMap(p => dirSchema(spark, new Path(p)))
+    if (schemas.isEmpty) return f(spark.read.parquet(paths: _*), dirs)
+    val merged =
+      try Some(schemas.reduce(Shim.mergeSchemas(spark, _, _)))
+      catch { case _: org.apache.spark.SparkException |
+                   _: org.apache.spark.sql.AnalysisException => None }
+    merged match {
+      case Some(schema) => f(spark.read.schema(schema).parquet(paths: _*), dirs)
+      case None => dirs.map(d => scanDirs(spark, tableDir, Seq(d))(f))
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+    }
+  }
+
+  /** [[scanDirs]] with nothing applied per dir; package-visible so a
+    * spec can hold it against Spark's own schema inference. */
+  private[graft] def readDirs(spark: SparkSession, tableDir: String,
+                              dirs: Seq[String]): DataFrame =
+    scanDirs(spark, tableDir, dirs)((df, _) => df)
+
   /** Build `_bloom_<col>` sidecars inside `dataDir` for each column —
     * Spark's own `DataFrameStatFunctions.bloomFilter` aggregate (one
     * distributed pass over the dir; insertion is bitwise-OR, so the
@@ -698,7 +765,7 @@ object Snapshots {
                           fpp: Double = 0.001): Seq[String] = {
     if (cols.isEmpty) return Nil
     val p = new Path(tableDir, dataDir).toString
-    val df = spark.read.parquet(p)
+    val df = readDirs(spark, tableDir, Seq(dataDir))
     val present = cols.filter(df.columns.contains)
     if (strict) require(present == cols,
       s"bloom column(s) ${cols.diff(present).mkString(",")} absent from $p")
@@ -773,12 +840,14 @@ object Snapshots {
     * merge/rewrite maintaining the table's established stats columns)
     * silently omits such columns: the dir degrades to never-skipped on
     * them, an optimization loss, never a semantics change. */
-  private def dirTypedStats(spark: SparkSession, dirPath: String,
-                            cols: Seq[String], strict: Boolean):
+  private def dirTypedStats(spark: SparkSession, tableDir: String,
+                            dataDir: String, cols: Seq[String],
+                            strict: Boolean):
       (Map[String, (Long, Long)], Map[String, (String, String)]) = {
     import org.apache.spark.sql.functions.{col, min, max}
     if (cols.isEmpty) return (Map.empty, Map.empty)
-    val df = spark.read.parquet(dirPath)
+    val dirPath = new Path(tableDir, dataDir).toString
+    val df = readDirs(spark, tableDir, Seq(dataDir))
     val present = cols.filter(df.columns.contains)
     if (strict) require(present == cols,
       s"stats column(s) ${cols.diff(present).mkString(",")} absent from $dirPath")
@@ -804,13 +873,6 @@ object Snapshots {
     }
     (longs, strs)
   }
-
-  /** Long-range slice of [[dirTypedStats]] — the pre-round-17 shape,
-    * kept for the synthetic-stats paths that are long-only. */
-  private def dirStats(spark: SparkSession, dirPath: String,
-                       cols: Seq[String],
-                       strict: Boolean): Map[String, (Long, Long)] =
-    dirTypedStats(spark, dirPath, cols, strict)._1
 
   /** [[commitAppend]] that additionally records the delta's min/max of
     * long-typed `statsCol` in the manifest — the Iceberg/Delta file-
@@ -1015,8 +1077,8 @@ object Snapshots {
          Map[String, Map[String, (String, String)]],
          Map[String, Seq[String]]) = {
       val typed = moved.map { case (d, vals) =>
-        val (longs, strs) = dirTypedStats(spark,
-          new Path(tableDir, d).toString, statsCols, strict = false)
+        val (longs, strs) = dirTypedStats(spark, tableDir, d, statsCols,
+          strict = false)
         (d, longs ++ synth.zip(vals).collect {
           case (tr, Some(x)) => tr.statsName -> ((x, x))
         }.toMap, strs)
@@ -1267,9 +1329,8 @@ object Snapshots {
     // monotonically loses file-skipping — every merged dir used to land
     // stats-less. Non-strict: a payload missing/all-null on a stats
     // column degrades that dir to never-skipped, never aborts the merge.
-    val (newStats, newSStats) = dirTypedStats(spark,
-      new Path(tableDir, dataDir).toString, cur.statsColumns,
-      strict = false)
+    val (newStats, newSStats) = dirTypedStats(spark, tableDir, dataDir,
+      cur.statsColumns, strict = false)
     val newBlooms = buildBlooms(spark, tableDir, dataDir,
       cur.bloomColumns, strict = false)
     val entries = cur.entries :+ ((DeleteEntry: EntryKind, delDir)) :+
@@ -1518,123 +1579,69 @@ object Snapshots {
     won
   }
 
-  private def maskedDirScan(spark: SparkSession, tableDir: String,
-                            snap: Snapshot, i: Int, d: String,
-                            preFilter: Option[org.apache.spark.sql.Column],
-                            withPos: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    def path(x: String) = new Path(tableDir, x).toString
-    val after = snap.entries.drop(i + 1)
-    val eqAfter = after.collect { case (DeleteEntry, dd) => path(dd) }
-    val posAfter = after.collect { case (PosDeleteEntry, pd) => path(pd) }
-    val raw = spark.read.parquet(path(d))
-    val physCols = raw.columns.map(col).toIndexedSeq
-    // schema ops rewrite the dir's PHYSICAL shape to the snapshot's
-    // LOGICAL one before anything else sees it — the preFilter, the
-    // delete joins, and the output projection all speak logical names
-    val dataCols = logicalNames(raw.columns.toIndexedSeq, snap, d).map(col)
-    var base = applySchemaOps(
-      if (!withPos && posAfter.isEmpty) raw
-      else raw
-        .select(physCols :+ col("_metadata.file_name").as("_file")
-          :+ col("_metadata.row_index").as("_pos"): _*)
-        .withColumn("_dir", lit(d)),
-      snap, d)
-    preFilter.foreach(f => base = base.filter(f))
-    if (posAfter.nonEmpty) {
-      val dels = spark.read.parquet(posAfter: _*)
-        .filter(col("_dir") === d)
-        .select(col("_file"), col("_pos")).distinct()
-      base = base.join(dels, Seq("_file", "_pos"), "left_anti")
-    }
-    if (eqAfter.nonEmpty) {
-      val keys = snap.deleteKeys
-      base = base.join(
-        spark.read.parquet(eqAfter: _*)
-          .select(keys.map(col): _*).distinct(),
-        keys, "left_anti")
-    }
-    // the USING joins front their key columns — restore the stored
-    // order so the schema never depends on delete placement
-    val outCols =
-      if (withPos) dataCols ++ Seq(col("_dir"), col("_file"), col("_pos"))
-      else dataCols
-    base.select(outCols: _*)
-  }
-
-  /** [[maskedDirScan]] over a RUN of data dirs that share one delete
-    * horizon and one applicable-schema-op set — the manifest-scale
+  /** One RUN of data dirs that share one delete horizon and one
+    * applicable-schema-op set, read merge-on-read — the manifest-scale
     * read path (round-18): ONE multi-path parquet relation instead of
     * one per dir, so a year of hourly appends costs a handful of plan
     * nodes, not ~9k. `lastIdx` is the entries index of the run's last
     * member (every member's delete suffix is identical because a
-    * delete/posdelete entry always BREAKS a run). `mergeSchema` makes
-    * additive evolution inside the run safe: files narrower than the
-    * merged schema read null in the missing columns — exactly what
-    * the per-dir unionByName(allowMissingColumns) produced. Position
-    * deletes join on the full (_dir, _file, _pos) address; `_dir` is
-    * derived per row from the scan's file path (data dirs are FLAT —
-    * both append and stage-move land `data/<name>/part-*.parquet` —
-    * so the manifest dir name is the last-but-one path segment). */
+    * delete/posdelete entry always BREAKS a run); the run anti-joins
+    * the equality-delete and position-delete dirs committed after it.
+    * [[scanDirs]] merges the members' footer schemas, so files
+    * narrower than the merged schema read null in the missing columns
+    * (ADDITIVE evolution), and degrades a type-widened run to the
+    * per-dir union. Schema ops rewrite the PHYSICAL shape to the
+    * snapshot's LOGICAL one before anything else sees it — the
+    * preFilter, the delete joins and the output projection all speak
+    * logical names. Position deletes join on the full (_dir, _file,
+    * _pos) address; `_dir` is derived per row from the scan's file
+    * path (data dirs are FLAT — both append and stage-move land
+    * `data/<name>/part-*.parquet` — so the manifest dir name is the
+    * last-but-one path segment). */
   private def maskedGroupScan(spark: SparkSession, tableDir: String,
                               snap: Snapshot, lastIdx: Int,
                               dirs: Seq[String],
                               preFilter: Option[org.apache.spark.sql.Column],
                               withPos: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.{col, substring_index}
-    def path(x: String) = new Path(tableDir, x).toString
     val after = snap.entries.drop(lastIdx + 1)
-    val eqAfter = after.collect { case (DeleteEntry, dd) => path(dd) }
-    val posAfter = after.collect { case (PosDeleteEntry, pd) => path(pd) }
-    val raw =
-      if (dirs.size == 1) spark.read.parquet(path(dirs.head))
-      else
-        // mergeSchema covers ADDITIVE evolution; a TYPE-widened history
-        // (an int append followed by a long append of the same column —
-        // legal, the old per-dir unionByName coerced it) makes the
-        // footer merge throw. Degrade that run to the per-dir union the
-        // pre-grouping reader always ran — correctness first, the plan
-        // win only where the footers agree.
-        try spark.read.option("mergeSchema", "true")
-          .parquet(dirs.map(path): _*)
-        catch { case _: org.apache.spark.SparkException |
-                     _: org.apache.spark.sql.AnalysisException =>
-          return dirs.map(d =>
-            maskedDirScan(spark, tableDir, snap, lastIdx, d, preFilter,
-              withPos))
-            .reduce(_.unionByName(_, allowMissingColumns = true))
-        }
-    val physCols = raw.columns.map(col).toIndexedSeq
-    // every run member shares the same applicable-op set (the grouping
-    // key), so any member names the logical rewrite for the whole run
-    val d0 = dirs.head
-    val dataCols = logicalNames(raw.columns.toIndexedSeq, snap, d0).map(col)
-    var base = applySchemaOps(
-      if (!withPos && posAfter.isEmpty) raw
-      else raw
-        .select(physCols :+ col("_metadata.file_name").as("_file")
-          :+ col("_metadata.row_index").as("_pos")
-          :+ substring_index(substring_index(
-            col("_metadata.file_path"), "/", -3), "/", 2).as("_dir"): _*),
-      snap, d0)
-    preFilter.foreach(f => base = base.filter(f))
-    if (posAfter.nonEmpty) {
-      val dels = spark.read.parquet(posAfter: _*)
-        .filter(col("_dir").isin(dirs: _*))
-        .select(col("_dir"), col("_file"), col("_pos")).distinct()
-      base = base.join(dels, Seq("_dir", "_file", "_pos"), "left_anti")
+    val eqAfter = after.collect { case (DeleteEntry, dd) => dd }
+    val posAfter = after.collect { case (PosDeleteEntry, pd) => pd }
+    scanDirs(spark, tableDir, dirs) { (raw, members) =>
+      val physCols = raw.columns.map(col).toIndexedSeq
+      // every run member shares the same applicable-op set (the
+      // grouping key), so any member names the logical rewrite
+      val d0 = members.head
+      val dataCols = logicalNames(raw.columns.toIndexedSeq, snap, d0).map(col)
+      var base = applySchemaOps(
+        if (!withPos && posAfter.isEmpty) raw
+        else raw
+          .select(physCols :+ col("_metadata.file_name").as("_file")
+            :+ col("_metadata.row_index").as("_pos")
+            :+ substring_index(substring_index(
+              col("_metadata.file_path"), "/", -3), "/", 2).as("_dir"): _*),
+        snap, d0)
+      preFilter.foreach(f => base = base.filter(f))
+      if (posAfter.nonEmpty) {
+        val dels = readDirs(spark, tableDir, posAfter)
+          .filter(col("_dir").isin(members: _*))
+          .select(col("_dir"), col("_file"), col("_pos")).distinct()
+        base = base.join(dels, Seq("_dir", "_file", "_pos"), "left_anti")
+      }
+      if (eqAfter.nonEmpty) {
+        val keys = snap.deleteKeys
+        base = base.join(
+          readDirs(spark, tableDir, eqAfter).select(keys.map(col): _*)
+            .distinct(),
+          keys, "left_anti")
+      }
+      // the USING joins front their key columns — restore the stored
+      // order so the schema never depends on delete placement
+      val outCols =
+        if (withPos) dataCols ++ Seq(col("_dir"), col("_file"), col("_pos"))
+        else dataCols
+      base.select(outCols: _*)
     }
-    if (eqAfter.nonEmpty) {
-      val keys = snap.deleteKeys
-      base = base.join(
-        spark.read.parquet(eqAfter: _*)
-          .select(keys.map(col): _*).distinct(),
-        keys, "left_anti")
-    }
-    val outCols =
-      if (withPos) dataCols ++ Seq(col("_dir"), col("_file"), col("_pos"))
-      else dataCols
-    base.select(outCols: _*)
   }
 
   /** The shared grouped read driver: walk the manifest once, keep the
@@ -1679,7 +1686,7 @@ object Snapshots {
 
   /** Read the table at a snapshot (default: current), merge-on-read:
     * each data dir anti-joins the equality-delete dirs AND the
-    * position-delete dirs committed AFTER it (see [[maskedDirScan]]).
+    * position-delete dirs committed AFTER it (see [[maskedGroupScan]]).
     * Both delete forms stay small against the data at any scale, so
     * the anti-join sides broadcast (AQE). Throws on an unknown
     * snapshot id or an empty table — silent empty frames would mask a
@@ -1707,7 +1714,7 @@ object Snapshots {
     // allowMissingColumns = ADDITIVE schema evolution on read: an
     // append that added a column leaves earlier deltas narrower — they
     // read as null in the new column; renames and drops are manifest
-    // schema ops applied per-dir inside maskedDirScan
+    // schema ops applied per run inside maskedGroupScan
     frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
@@ -2129,7 +2136,7 @@ object Snapshots {
                 16, 10).cast("long"), lit(10000L)) < rowRateBp)
           // full row rate → the dir scans exactly as read() does (no
           // address-column attach); only a binding row draw pays _pos
-          val scan = maskedDirScan(spark, tableDir, snap, i, d,
+          val scan = maskedGroupScan(spark, tableDir, snap, i, Seq(d),
             rowDraw, withPos = rowDraw.isDefined)
           Some(if (rowDraw.isEmpty) scan
             else scan.select(
@@ -2592,8 +2599,7 @@ object Snapshots {
         sys.error(s"staged branch '$branch' vanished under $tableDir"))
       val audited =
         if (wholeTable) readBranch(spark, tableDir, branch)
-        else spark.read.parquet(
-          new Path(tableDir, head.entries.last._2).toString)
+        else readDirs(spark, tableDir, Seq(head.entries.last._2))
       gate(audited, if (wholeTable) "table" else "batch")
       wapPublish(spark, tableDir, branch, tag)
     } finally {
@@ -2736,7 +2742,6 @@ object Snapshots {
       if (fromId == 0L) None
       else Some(get(spark, tableDir, fromId).getOrElse(
         sys.error(s"no snapshot snap-$fromId under $tableDir")))
-    def path(d: String) = new Path(tableDir, d).toString
     val fromEntries = from.map(_.entries).getOrElse(Nil)
     def withOp(df: DataFrame, op: String): DataFrame =
       df.select(lit(op).as("op") +: df.columns.map(col).toIndexedSeq: _*)
@@ -2777,30 +2782,20 @@ object Snapshots {
       }
       val insFrames = runs.map { case (li, dirs) =>
         val delsAfter = interval.drop(li + 1)
-          .collect { case (DeleteEntry, dd) => path(dd) }
+          .collect { case (DeleteEntry, dd) => dd }
         // interval dirs read under the TO snapshot's schema ops (a
-        // rename later in the interval applies to them too); a
-        // type-widened run degrades to the per-dir union, as in
-        // maskedGroupScan
-        val raw =
-          if (dirs.size == 1) spark.read.parquet(path(dirs.head))
-          else
-            try spark.read.option("mergeSchema", "true")
-              .parquet(dirs.map(path): _*)
-            catch { case _: org.apache.spark.SparkException |
-                         _: org.apache.spark.sql.AnalysisException =>
-              dirs.map(d => spark.read.parquet(path(d)))
-                .reduce(_.unionByName(_, allowMissingColumns = true))
-            }
-        val base = applySchemaOps(raw, to, dirs.head)
-        if (delsAfter.isEmpty) base
-        else base.join(
-            spark.read.parquet(delsAfter: _*)
-              .select(to.deleteKeys.map(col): _*).distinct(),
-            to.deleteKeys, "left_anti")
-          .select(base.columns.map(col).toIndexedSeq: _*)
+        // rename later in the interval applies to them too)
+        scanDirs(spark, tableDir, dirs) { (raw, members) =>
+          val base = applySchemaOps(raw, to, members.head)
+          if (delsAfter.isEmpty) base
+          else base.join(
+              readDirs(spark, tableDir, delsAfter)
+                .select(to.deleteKeys.map(col): _*).distinct(),
+              to.deleteKeys, "left_anti")
+            .select(base.columns.map(col).toIndexedSeq: _*)
+        }
       }
-      val intervalDels = interval.collect { case (DeleteEntry, dd) => path(dd) }
+      val intervalDels = interval.collect { case (DeleteEntry, dd) => dd }
       val deletes: Option[DataFrame] =
         if (intervalDels.isEmpty || from.isEmpty) None
         else {
@@ -2810,7 +2805,7 @@ object Snapshots {
           // or drop inside the interval
           Some(readAt(spark, tableDir, from.get.copy(schemaOps = to.schemaOps))
             .join(
-              spark.read.parquet(intervalDels: _*)
+              readDirs(spark, tableDir, intervalDels)
                 .select(keys.map(col): _*).distinct(),
               keys, "left_semi"))
         }
@@ -2973,8 +2968,9 @@ object Snapshots {
     *  3. the confirmed `liveRows × avgRowBytes` is returned iff it
     *     clears the threshold — the caller wraps the read in Spark's
     *     own BROADCAST hint ([[graft.plans.SnapshotRelationRule]]
-    *     does, so every SQL join against a small snapshot table plans
-    *     BroadcastHashJoin at any file-size skew).
+    *     does, for statements that can join, so every SQL join against
+    *     a small snapshot table plans BroadcastHashJoin at any
+    *     file-size skew).
     *
     * Memoized per (table, snapshot id) — repeated analyses of a hot
     * table cost one map probe. None = not provably broadcastable. */
@@ -3007,7 +3003,16 @@ object Snapshots {
             if (dataRows == 0L) Some(0L)
             else if (estRows * avg > threshold) None
             else {
-              val live = read(spark, tableDir).count() // confirm
+              // the confirm count is the one job sizing can start during
+              // analysis: name it so a trace can attribute it, then give
+              // the caller its own description back
+              val sc = spark.sparkContext
+              val prev = sc.getLocalProperty("spark.job.description")
+              sc.setJobDescription(
+                s"graft:snapshot:broadcast-confirm $tableDir")
+              val live =
+                try readAt(spark, tableDir, cur).count()
+                finally sc.setJobDescription(prev)
               val bytes = live * avg
               if (bytes <= threshold) Some(bytes) else None
             }

@@ -1,9 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{DeleteAction, DeleteFromTable, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, SubqueryAlias, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.catalyst.analysis.{AnalysisContext, RelationTimeTravel, UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteAction, DeleteFromTable, InsertIntoStatement, InsertStarAction, Join, LogicalPlan, MergeIntoTable, SubqueryAlias, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.graftshim.Shim
@@ -24,13 +24,16 @@ import graft.ops.Snapshots
   *    time-travel syntax, matched on the parsed [[RelationTimeTravel]]
   *    node,
   *
-  * by substituting the ANALYZED logical plan of [[Snapshots.read]] —
-  * the same composed scan (delete anti-joins, schema-op projections)
-  * the Scala API builds, so SQL text and DataFrame calls produce one
-  * plan shape, with pushdown and pruning intact. No parquet reader is
-  * re-implemented and no data is copied: the rule is pure plan
-  * substitution, which is exactly what a DSv2 catalog would bolt on
-  * top of.
+  * by substituting the ANALYZED logical plan of the UNFILTERED
+  * [[Snapshots.read]] — the same composed scan (delete anti-joins,
+  * schema-op projections) the Scala API builds. A SQL `WHERE` runs
+  * over that plan: Spark pushes it into each parquet scan, but no data
+  * dir is skipped on manifest stats or Blooms (that is the filtered
+  * `read`, which SQL text does not reach). Building the plan starts no
+  * Spark job: dir schemas come from parquet footers on the driver. No
+  * parquet reader is re-implemented and no data is copied: the rule is
+  * pure plan substitution, which is exactly what a DSv2 catalog would
+  * bolt on top of.
   *
   * A bare `<alias>` also resolves, but only AFTER Spark's own
   * resolution declined it (injected rules run after the built-ins in
@@ -91,7 +94,8 @@ object SnapshotSql {
     * a staged-but-unpublished state a SQL-only audit job can query
     * while every main read stays bitwise clean. */
   private[plans] def resolve(spark: SparkSession, parts: Seq[String],
-                             version: Option[Long]): Option[LogicalPlan] = {
+                             version: Option[Long],
+                             canJoin: => Boolean): Option[LogicalPlan] = {
     def known(a: String): Boolean = splitBranch(a) match {
       case (base, Some(_)) => lookup(base).isDefined
       case _ => lookup(a).isDefined || lookup(stripV(a)._1).isDefined
@@ -128,8 +132,11 @@ object SnapshotSql {
             // plan BroadcastHashJoin at any file-size skew (delete
             // masking is invisible to the file-size heuristic). Sizing
             // + the confirm count live in Snapshots.broadcastableBytes
-            // (footer metadata, memoized per snapshot id).
-            if (ver.isEmpty &&
+            // (footer metadata, memoized per snapshot id). The hint is
+            // sized only for a statement that can join: a single-table
+            // read would pay the confirm count for a hint no join
+            // uses, and every commit makes a new snapshot id.
+            if (ver.isEmpty && canJoin &&
                 Snapshots.broadcastableBytes(spark, dir).isDefined)
               org.apache.spark.sql.catalyst.plans.logical.ResolvedHint(
                 plan,
@@ -657,16 +664,25 @@ class SnapshotRelationRule(spark: SparkSession) extends Rule[LogicalPlan] {
           case None => up
         }
     }
+    // can this statement use a BROADCAST hint? Only through a join, a
+    // subquery expression, or as the subquery being analyzed itself
+    lazy val canJoin = AnalysisContext.get.outerPlan.isDefined ||
+      dml.exists {
+        case _: Join => true
+        case p => p.expressions.exists(
+          _.exists(_.isInstanceOf[SubqueryExpression]))
+      }
     dml.resolveOperatorsUp {
       case tt @ RelationTimeTravel(u: UnresolvedRelation, None, Some(v))
           if v.forall(_.isDigit) =>
-        SnapshotSql.resolve(spark, u.multipartIdentifier, Some(v.toLong))
-          .getOrElse(tt)
+        SnapshotSql.resolve(spark, u.multipartIdentifier, Some(v.toLong),
+          canJoin).getOrElse(tt)
       case tt @ RelationTimeTravel(u: UnresolvedRelation, Some(ts), None) =>
         SnapshotSql.resolveAsOf(spark, u.multipartIdentifier, ts)
           .getOrElse(tt)
       case u: UnresolvedRelation =>
-        SnapshotSql.resolve(spark, u.multipartIdentifier, None).getOrElse(u)
+        SnapshotSql.resolve(spark, u.multipartIdentifier, None, canJoin)
+          .getOrElse(u)
     }
   }
 }

@@ -61,6 +61,35 @@ object Shim {
       .internalCreateDataFrame(df.queryExecution.toRdd, df.schema,
         isStreaming = false)
 
+  /** Spark's own schema for one parquet file, read from its footer on
+    * the driver: the same footer-to-schema conversion that parquet
+    * schema inference runs inside its one-task job, under the
+    * session's parquet settings. */
+  def parquetFooterSchema(spark: SparkSession,
+                          file: org.apache.hadoop.fs.FileStatus,
+                          conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf))
+    val meta = try rdr.getFooter finally rdr.close()
+    val sqlConf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(sqlConf))
+  }
+
+  /** `StructType.merge` under the session's case sensitivity — the
+    * merge `mergeSchema` applies across files. Throws on incompatible
+    * field types (e.g. int against long). */
+  def mergeSchemas(spark: SparkSession,
+                   a: org.apache.spark.sql.types.StructType,
+                   b: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    a.merge(b, spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.caseSensitiveAnalysis)
+
   /** Idempotently register `builder` under `name` in `spark`'s function
     * registry (session-local, no extension-loading required). */
   def registerFunction(

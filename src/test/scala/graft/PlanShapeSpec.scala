@@ -715,7 +715,7 @@ class PlanShapeSpec extends SparkSpec {
       s"the value predicate must push through the rename to the scan:\n$p1")
     assert(shuffles(p1).isEmpty, s"rename read is scan-only:\n$p1")
     // hidden-range path: the raw-column predicate reaches the surviving
-    // dirs' scans as a pushed filter (maskedDirScan preFilter contract)
+    // dirs' scans as a pushed filter (maskedGroupScan preFilter contract)
     val hroot = java.nio.file.Files.createTempDirectory("s35_plan").toString
     val t10 = Snapshots.TruncateTransform("v", 10000L)
     Snapshots.commitAppendHidden(

@@ -1798,6 +1798,115 @@ class ScaleSpec extends SparkSpec {
     assert(ch.filter("op = 'I'").count() == 3)
   }
 
+  timedTest("snapshots: footer-read schemas — read/readWithPos/changesBetween keep the inferred schema and rows across add/rename/drop, both delete kinds, an empty delete and a type-widened run", 300) {
+    import graft.ops.Snapshots
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    // schema (names, types, order) plus the sorted rows; row addresses
+    // carry random file names and nonces, so only `_pos` is compared
+    def shape(df: DataFrame): String = {
+      val rows = df.drop("_dir", "_file").collect()
+        .map(_.toSeq.mkString(",")).sorted.mkString(";")
+      s"${df.schema.toDDL} | $rows"
+    }
+    // A: add a column, rename, an equality delete, a position delete,
+    // an empty delete batch, drop
+    val a = tmp("footA")
+    Snapshots.commitAppend(
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), a)
+    Snapshots.commitAppend(
+      Seq((4L, "d", 40), (5L, "e", 50)).toDF("k", "v", "w"), a)
+    Snapshots.commitRenameColumn(spark, a, "v", "name")
+    Snapshots.commitDelete(Seq(2L).toDF("k"), a, "k")
+    Snapshots.commitAppend(Seq((6L, "f", 60)).toDF("k", "name", "w"), a)
+    Snapshots.commitDeletePositions(Snapshots.readWithPos(spark, a)
+      .filter($"k" === 4L).select("_dir", "_file", "_pos"), a)
+    Snapshots.commitDelete(Seq.empty[Long].toDF("k"), a, "k")
+    Snapshots.commitDropColumn(spark, a, "w")
+    Snapshots.commitAppend(Seq((7L, "g")).toDF("k", "name"), a)
+    // B: int then long in one run — the footers cannot merge
+    val b = tmp("footB")
+    Snapshots.commitAppend(Seq((1, "a"), (2, "b")).toDF("n", "v"), b)
+    Snapshots.commitAppend(Seq((3L, "c")).toDF("n", "v"), b)
+    Snapshots.commitDelete(Seq(1L).toDF("n"), b, "n")
+    Snapshots.commitAppend(Seq((4L, "d")).toDF("n", "v"), b)
+    // C: one run whose path order (delta-10 < delta-3) differs from its
+    // commit order, the later dir with a new column in front
+    val c = tmp("footC")
+    Snapshots.commitAppend(Seq((1L, "a")).toDF("k", "v"), c)
+    Snapshots.commitDelete(Seq(1L).toDF("k"), c, "k")
+    (3 to 9).foreach(i =>
+      Snapshots.commitAppend(Seq((i.toLong, s"v$i")).toDF("k", "v"), c))
+    Snapshots.commitAppend(Seq((10, 10L, "v10")).toDF("w", "k", "v"), c)
+
+    // the reader against Spark's own inference, dir set by dir set
+    def inferred(root: String, dirs: Seq[String]): DataFrame =
+      spark.read.option("mergeSchema", "true")
+        .parquet(dirs.map(d => new org.apache.hadoop.fs.Path(root, d).toString): _*)
+    for (root <- Seq(a, b, c)) {
+      val cur = Snapshots.current(spark, root).get
+      val sets = cur.dataDirs.map(Seq(_)) ++
+        Seq(cur.dataDirs, cur.deleteDirs, cur.posDeleteDirs).filter(_.nonEmpty)
+      sets.filterNot(ds => root == b && ds == cur.dataDirs).foreach { ds =>
+        assert(shape(Snapshots.readDirs(spark, root, ds)) ==
+          shape(inferred(root, ds)), s"$root: $ds")
+      }
+    }
+    // B's int and long footers: inference refuses, the reader unions
+    val bDirs = Snapshots.current(spark, b).get.dataDirs
+    intercept[org.apache.spark.SparkException](inferred(b, bDirs))
+    assert(shape(Snapshots.readDirs(spark, b, bDirs)) ==
+      "n BIGINT,v STRING | 1,a;2,b;3,c;4,d")
+
+    // end to end: the results the inference-based reader gave
+    val got = Seq(
+      "a read" -> Snapshots.read(spark, a),
+      "a read@2" -> Snapshots.read(spark, a, Some(2L)),
+      "a read@5" -> Snapshots.read(spark, a, Some(5L)),
+      "a readWithPos" -> Snapshots.readWithPos(spark, a),
+      "a changes 0..9" -> Snapshots.changesBetween(spark, a, 0L, 9L),
+      "a changes 1..5" -> Snapshots.changesBetween(spark, a, 1L, 5L),
+      "a changes 6..9" -> Snapshots.changesBetween(spark, a, 6L, 9L),
+      "b read" -> Snapshots.read(spark, b),
+      "b readWithPos" -> Snapshots.readWithPos(spark, b),
+      "b changes 0..4" -> Snapshots.changesBetween(spark, b, 0L, 4L),
+      "c read" -> Snapshots.read(spark, c),
+      "c readWithPos" -> Snapshots.readWithPos(spark, c),
+      "c changes 2..10" -> Snapshots.changesBetween(spark, c, 2L, 10L)
+    ).map { case (l, df) => l -> shape(df) }
+    val want = Seq(
+      "a read" ->
+        "k BIGINT,name STRING | 1,a;3,c;5,e;6,f;7,g",
+      "a read@2" ->
+        "k BIGINT,v STRING,w INT | 1,a,null;2,b,null;3,c,null;4,d,40;5,e,50",
+      "a read@5" ->
+        "k BIGINT,name STRING,w INT | 1,a,null;3,c,null;4,d,40;5,e,50;6,f,60",
+      "a readWithPos" ->
+        "k BIGINT,name STRING,_dir STRING NOT NULL,_file STRING NOT NULL,_pos BIGINT NOT NULL | 1,a,0;3,c,0;5,e,0;6,f,0;7,g,0",
+      "a changes 0..9" ->
+        "op STRING NOT NULL,k BIGINT,name STRING | I,1,a;I,3,c;I,5,e;I,6,f;I,7,g",
+      "a changes 1..5" ->
+        "op STRING NOT NULL,k BIGINT,name STRING,w INT | D,2,b,null;I,4,d,40;I,5,e,50;I,6,f,60",
+      "a changes 6..9" ->
+        "op STRING NOT NULL,k BIGINT,name STRING | I,7,g",
+      "b read" ->
+        "n BIGINT,v STRING | 2,b;3,c;4,d",
+      "b readWithPos" ->
+        "n BIGINT,v STRING,_dir STRING NOT NULL,_file STRING NOT NULL,_pos BIGINT NOT NULL | 2,b,0;3,c,0;4,d,0",
+      "b changes 0..4" ->
+        "op STRING NOT NULL,n BIGINT,v STRING | I,2,b;I,3,c;I,4,d",
+      "c read" ->
+        "k BIGINT,v STRING,w INT | 10,v10,10;3,v3,null;4,v4,null;5,v5,null;6,v6,null;7,v7,null;8,v8,null;9,v9,null",
+      "c readWithPos" ->
+        "k BIGINT,v STRING,_dir STRING NOT NULL,_file STRING NOT NULL,_pos BIGINT NOT NULL,w INT | 10,v10,0,10;3,v3,0,null;4,v4,0,null;5,v5,0,null;6,v6,0,null;7,v7,0,null;8,v8,0,null;9,v9,0,null",
+      "c changes 2..10" ->
+        "op STRING NOT NULL,w INT,k BIGINT,v STRING | I,10,10,v10;I,null,3,v3;I,null,4,v4;I,null,5,v5;I,null,6,v6;I,null,7,v7;I,null,8,v8;I,null,9,v9"
+    )
+    got.zip(want).foreach { case (g, w) => assert(g == w) }
+    assert(got.size == want.size)
+  }
+
   timedTest("snapshots: disjunctive pruning property — OR/IN reads equal read().filter on random DNF predicates, and actually skip (round-18)", 300) {
     import graft.ops.Snapshots
     import graft.ops.Snapshots.{BucketTransform, TruncateTransform}

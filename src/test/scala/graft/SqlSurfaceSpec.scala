@@ -8,7 +8,7 @@ class SqlSurfaceSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("GraftSession.registerAll exposes the full SQL surface on a session") {
+  timedTest("GraftSession.registerAll exposes the full SQL surface on a session", 300) {
     GraftSession.registerAll(spark, Some(sf))
     val r = spark.sql(
       """SELECT g, topk_ids_by(CAST(vec_id AS DOUBLE), vec_id, 1)[0] AS top,
@@ -19,7 +19,7 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(r.length == 3 && r.forall(_.getLong(2) == 1L))
   }
 
-  test("spark.sql over registered views matches the DataFrame query") {
+  timedTest("spark.sql over registered views matches the DataFrame query", 300) {
     Tables.registerAll(spark, sf)
     val sql = spark.sql(
       """SELECT n_name,
@@ -37,7 +37,7 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(sql == df && sql.nonEmpty)
   }
 
-  test("registered kernels work from SQL text over real embeddings") {
+  timedTest("registered kernels work from SQL text over real embeddings", 300) {
     graft.functions.VectorExpressions.register(spark)
     Tables.registerAll(spark, sf)
     val rows = spark.sql(
@@ -47,7 +47,7 @@ class SqlSurfaceSpec extends SparkSpec {
     rows.foreach(r => assert(r.getLong(1) == 1000L)) // cos(v, v) = 1
   }
 
-  test("every kernel: SQL text == DataFrame result, bit for bit") {
+  timedTest("every kernel: SQL text == DataFrame result, bit for bit", 300) {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorExpressions
     VectorExpressions.register(spark)
@@ -122,7 +122,7 @@ class SqlSurfaceSpec extends SparkSpec {
         .orderBy("vec_id"))
   }
 
-  test("GraftExtensions: kernels arrive via spark.sql.extensions, no code needed") {
+  timedTest("GraftExtensions: kernels arrive via spark.sql.extensions, no code needed", 300) {
     import org.apache.spark.sql.SparkSession
     // build a FRESH session (shared SparkContext) with the extensions
     // applied at construction — the spark-submit --conf route
@@ -154,7 +154,7 @@ class SqlSurfaceSpec extends SparkSpec {
     }
   }
 
-  test("s41: snapshot tables are SQL-addressable — namespace, VERSION AS OF, __v suffix, bare alias, no shadowing") {
+  timedTest("s41: snapshot tables are SQL-addressable — namespace, VERSION AS OF, __v suffix, bare alias, no shadowing", 300) {
     import graft.ops.Snapshots
     import graft.plans.SnapshotSql
     import spark.implicits._
@@ -192,7 +192,7 @@ class SqlSurfaceSpec extends SparkSpec {
     SnapshotSql.unregister("sqlsnap")
   }
 
-  test("s44: SQL-text DML — INSERT INTO and MERGE INTO a snapshot table match the Scala API, unsupported shapes refuse loudly (round-18)") {
+  timedTest("s44: SQL-text DML — INSERT INTO and MERGE INTO a snapshot table match the Scala API, unsupported shapes refuse loudly (round-18)", 300) {
     import graft.ops.Snapshots
     import graft.plans.SnapshotSql
     import spark.implicits._
@@ -287,7 +287,7 @@ class SqlSurfaceSpec extends SparkSpec {
     } finally SnapshotSql.unregister("dml")
   }
 
-  test("s47: SQL DELETE via position deletes and keyed UPDATE — atomic, exact, refusals named (round-18)") {
+  timedTest("s47: SQL DELETE via position deletes and keyed UPDATE — atomic, exact, refusals named (round-18)", 300) {
     import graft.ops.Snapshots
     import graft.plans.SnapshotSql
     import spark.implicits._
@@ -342,7 +342,7 @@ class SqlSurfaceSpec extends SparkSpec {
     } finally SnapshotSql.unregister("mut")
   }
 
-  test("s46: branch reads from SQL — graft_snap.`alias@branch` sees the staged state, main stays clean, writes to branches refuse (round-18)") {
+  timedTest("s46: branch reads from SQL — graft_snap.`alias@branch` sees the staged state, main stays clean, writes to branches refuse (round-18)", 300) {
     import graft.ops.Snapshots
     import graft.plans.SnapshotSql
     import spark.implicits._
@@ -381,7 +381,7 @@ class SqlSurfaceSpec extends SparkSpec {
     } finally SnapshotSql.unregister("br")
   }
 
-  test("s44 guards (round-19): target-qualified DELETE conditions and MERGE cardinality violations refuse loudly") {
+  timedTest("s44 guards (round-19): target-qualified DELETE conditions and MERGE cardinality violations refuse loudly", 300) {
     import graft.ops.Snapshots
     import graft.plans.SnapshotSql
     import spark.implicits._
@@ -459,7 +459,7 @@ class SqlSurfaceSpec extends SparkSpec {
     } finally SnapshotSql.unregister("mg")
   }
 
-  test("s48: SQL DDL + maintenance — CTAS, ALTER RENAME/DROP, OPTIMIZE/VACUUM/EXPIRE/ROLLBACK, refusals intact (round-19)") {
+  timedTest("s48: SQL DDL + maintenance — CTAS, ALTER RENAME/DROP, OPTIMIZE/VACUUM/EXPIRE/ROLLBACK, refusals intact (round-19)", 300) {
     import graft.ops.Snapshots
     import graft.plans.SnapshotSql
     import spark.implicits._
@@ -560,7 +560,7 @@ class SqlSurfaceSpec extends SparkSpec {
     }
   }
 
-  test("s48: TIMESTAMP AS OF — commit stamps address main history; unstamped/absent bounds refuse loudly (round-19)") {
+  timedTest("s48: TIMESTAMP AS OF — commit stamps address main history; unstamped/absent bounds refuse loudly (round-19)", 300) {
     import graft.ops.Snapshots
     import graft.plans.SnapshotSql
     import spark.implicits._
@@ -603,7 +603,83 @@ class SqlSurfaceSpec extends SparkSpec {
     } finally SnapshotSql.unregister("tsx")
   }
 
-  test("s41: an alias that itself ends in __v<N> stays reachable — full-alias registration wins over time-travel stripping") {
+  timedTest("snapshot SQL reads analyze without Spark jobs; a JOIN, an IN-subquery and a CTE join still carry the BROADCAST hint", 300) {
+    import graft.ops.Snapshots
+    import graft.plans.SnapshotSql
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("snapnojob").toString
+    val id1 = Snapshots.commitAppend(
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root)
+    Thread.sleep(25)
+    val t1 = System.currentTimeMillis()
+    Thread.sleep(25)
+    Snapshots.commitAppend(Seq((3L, "c"), (4L, "d")).toDF("k", "v"), root)
+    Snapshots.commitDelete(Seq(Tuple1(2L)).toDF("k"), root, "k")
+    Snapshots.commitAppend(Seq((5L, "e")).toDF("k", "v"), root)
+    SnapshotSql.register("nojob", root)
+    val sc = spark.sparkContext
+    def jobsDuring(body: => Any): Int = {
+      org.apache.spark.GraftTestBus.drain(sc)
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          n.incrementAndGet(); ()
+        }
+      }
+      sc.addSparkListener(l)
+      try { body; org.apache.spark.GraftTestBus.drain(sc) }
+      finally sc.removeSparkListener(l)
+      n.get
+    }
+    def analyzed(q: String) = spark.sql(q).queryExecution.analyzed
+    def hinted(q: String): Boolean = analyzed(q).collectWithSubqueries {
+      case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) => h
+    }.nonEmpty
+    def rows(q: String): Set[(Long, String)] =
+      spark.sql(q).as[(Long, String)].collect().toSet
+    try {
+      val ts = java.time.Instant.ofEpochMilli(t1)
+        .atZone(java.time.ZoneOffset.UTC).toLocalDateTime.toString
+        .replace('T', ' ')
+      val reads = Seq(
+        "SELECT k, v FROM graft_snap.nojob WHERE k = 3",
+        "SELECT k, v FROM graft_snap.nojob WHERE k BETWEEN 2 AND 4",
+        s"SELECT k, v FROM graft_snap.nojob VERSION AS OF $id1",
+        s"SELECT k, v FROM graft_snap.nojob TIMESTAMP AS OF '$ts'")
+      // every commit above made a new snapshot id, so no sizing memo
+      // can hide a job here: analysis itself must start none
+      reads.foreach { q =>
+        val n = jobsDuring(analyzed(q))
+        assert(n == 0, s"analyzing `$q` started $n Spark job(s)")
+        assert(!hinted(q), s"a single-table read needs no hint: `$q`")
+      }
+      assert(rows(reads(0)) == Set((3L, "c")))
+      assert(rows(reads(1)) == Set((3L, "c"), (4L, "d")))
+      assert(rows(reads(2)) == Set((1L, "a"), (2L, "b")))
+      assert(rows(reads(3)) == Set((1L, "a"), (2L, "b")))
+      // statements that can join keep the CBO hint on the small table
+      Seq((1L, "x"), (3L, "y"), (5L, "z"), (9L, "w")).toDF("k", "w")
+        .createOrReplaceTempView("nojob_small")
+      val joins = Seq(
+        """SELECT s.k, s.w FROM nojob_small s
+          |JOIN graft_snap.nojob t ON s.k = t.k""".stripMargin,
+        """SELECT k, w FROM nojob_small
+          |WHERE k IN (SELECT k FROM graft_snap.nojob)""".stripMargin,
+        """WITH t AS (SELECT k FROM graft_snap.nojob)
+          |SELECT s.k, s.w FROM nojob_small s JOIN t ON s.k = t.k""".stripMargin)
+      joins.foreach { q =>
+        assert(hinted(q), s"lost the BROADCAST hint:\n$q\n${analyzed(q)}")
+        assert(rows(q) == Set((1L, "x"), (3L, "y"), (5L, "z")), q)
+      }
+    } finally {
+      SnapshotSql.unregister("nojob")
+      spark.catalog.dropTempView("nojob_small")
+    }
+  }
+
+  timedTest("s41: an alias that itself ends in __v<N> stays reachable — full-alias registration wins over time-travel stripping", 300) {
     import graft.ops.Snapshots
     import graft.plans.SnapshotSql
     import spark.implicits._

@@ -383,7 +383,7 @@ class StreamingSpec extends SparkSpec {
     assert(e == verts.as[Long].collect().map(v => v -> v).toMap)
   }
 
-  test("w34 stream MV: fresh after every batch, double exactly-once replay") {
+  timedTest("w34 stream MV: fresh after every batch, double exactly-once replay", 300) {
     import graft.streaming.CdcStream
     import graft.ops.{MaterializedView, Snapshots}
     import spark.implicits._
@@ -480,7 +480,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
   }
 
-  test("w37 checked ingest: clean batches land, violating batches quarantine, checkpoint replay exactly-once") {
+  timedTest("w37 checked ingest: clean batches land, violating batches quarantine, checkpoint replay exactly-once", 300) {
     import graft.streaming.CheckedIngestStream
     import graft.ops.Snapshots
     import graft.validate.Checks._
@@ -533,7 +533,7 @@ class StreamingSpec extends SparkSpec {
     assert(Snapshots.read(spark, quar2).count() == 1)
   }
 
-  test("w37 checked ingest: pre-appId legacy tags absorb replays only under the OPT-IN compat flag — never a new app's batches") {
+  timedTest("w37 checked ingest: pre-appId legacy tags absorb replays only under the OPT-IN compat flag — never a new app's batches", 300) {
     import graft.streaming.CheckedIngestStream
     import graft.ops.Snapshots
     import graft.validate.Checks._
@@ -574,7 +574,7 @@ class StreamingSpec extends SparkSpec {
       "default-off shim must not eat a new app's batches")
   }
 
-  test("w38 feed pacing: a paced interval endpoint skips STAGED branch manifests — unpublished rows never leak into the feed (round-18)") {
+  timedTest("w38 feed pacing: a paced interval endpoint skips STAGED branch manifests — unpublished rows never leak into the feed (round-18)", 300) {
     import graft.streaming.SnapshotFeed
     import graft.ops.Snapshots
     import spark.implicits._
@@ -604,7 +604,7 @@ class StreamingSpec extends SparkSpec {
     assert(r2.contains((5L, 7L)))
   }
 
-  test("w38 feed pacing: a backlog drains in bounded tagged intervals; expired cursor fails loudly with re-bootstrap guidance (round-18)") {
+  timedTest("w38 feed pacing: a backlog drains in bounded tagged intervals; expired cursor fails loudly with re-bootstrap guidance (round-18)", 300) {
     import graft.streaming.SnapshotFeed
     import graft.ops.Snapshots
     import spark.implicits._
@@ -653,7 +653,7 @@ class StreamingSpec extends SparkSpec {
       s"expired-cursor failure must carry guidance, got: ${e.getMessage}")
   }
 
-  test("w38 branch feed: an audit consumer folds staged intervals incrementally while main readers stay clean (round-18)") {
+  timedTest("w38 branch feed: an audit consumer folds staged intervals incrementally while main readers stay clean (round-18)", 300) {
     import graft.streaming.SnapshotFeed
     import graft.ops.Snapshots
     import spark.implicits._
@@ -692,7 +692,7 @@ class StreamingSpec extends SparkSpec {
       (_, _, _) => ()).isEmpty)
   }
 
-  test("w38 snapshot feed: manifest-chain source — intervals fold, mirror tracks, crash replay exactly-once") {
+  timedTest("w38 snapshot feed: manifest-chain source — intervals fold, mirror tracks, crash replay exactly-once", 300) {
     import graft.streaming.SnapshotFeed
     import graft.ops.Snapshots
     import spark.implicits._
@@ -1261,7 +1261,7 @@ class StreamingSpec extends SparkSpec {
     assert(totals == Map("en" -> 9L, "zh" -> 9L, "de" -> 4L, "fr" -> 2L))
   }
 
-  test("w27 CDC apply: upsert/delete merge, half-applied crash converges on replay") {
+  timedTest("w27 CDC apply: upsert/delete merge, half-applied crash converges on replay", 300) {
     import graft.streaming.CdcStream
     import graft.ops.Snapshots
     import org.apache.spark.sql.functions._
@@ -1353,7 +1353,7 @@ class StreamingSpec extends SparkSpec {
     assert(rows.toSeq == Seq(("x", 0L, 0L, 0L)))
   }
 
-  test("w40 graft_feed source: manifest-id offsets in the CHECKPOINT, paced batches, kill mid-stream recovers without re-delivery") {
+  timedTest("w40 graft_feed source: manifest-id offsets in the CHECKPOINT, paced batches, kill mid-stream recovers without re-delivery", 300) {
     import graft.ops.Snapshots
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Files.createTempDirectory("w40src").toString
@@ -1448,7 +1448,7 @@ class StreamingSpec extends SparkSpec {
       s"expired offset must refuse loudly, got: ${chain(e).mkString(" | ")}")
   }
 
-  test("w40 graft_feed SINK: writeStream lands batchId-tagged atomic commits; keyed mode upserts; restart absorbs replays") {
+  timedTest("w40 graft_feed SINK: writeStream lands batchId-tagged atomic commits; keyed mode upserts; restart absorbs replays", 300) {
     import graft.ops.Snapshots
     val root = java.nio.file.Files.createTempDirectory("w40sink").toString
     val (dst, ckpt) = (s"$root/t", s"$root/ckpt")
@@ -1486,7 +1486,7 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("w40 mirrorStream: one-call checkpoint-native mirror — folds exactly, resumes after stop without re-delivery") {
+  timedTest("w40 mirrorStream: one-call checkpoint-native mirror — folds exactly, resumes after stop without re-delivery", 300) {
     import graft.ops.Snapshots
     import graft.streaming.SnapshotFeed
     val root = java.nio.file.Files.createTempDirectory("w40ms").toString
